@@ -4,11 +4,40 @@ The reference's usage pattern is ``SELECT * FROM
 'hdfs://nn/path/file'`` — a path *is* a table.  Spark equivalent:
 ``spark.read.parquet(path)`` + temp view, or direct-path SQL
 (``SELECT … FROM parquet.`path```, see :func:`sql_path`).
+
+Schema cache.  A bare ``spark.read.parquet(path)`` infers the schema
+from the parquet footers, which costs one Spark job (plus a listing
+and footer reads against the NameNode) on every read.  The reference
+keeps per-namenode state so short queries do not repeat metadata work;
+here :func:`load_table` resolves each table's ``StructType`` once and
+reads every call with ``spark.read.schema(s).parquet(path)``.
+
+- Key: the table path.  The entry holds a signature and the
+  ``StructType``; at most one entry per path.
+- Signature: the path's Hadoop ``FileStatus`` (length, modification
+  time) and, for a directory, the name, length and modification time
+  of every entry below it (a part rewritten in place does not touch
+  its directory's mtime), plus the values of the parquet confs that
+  change what inference returns (:data:`_INFERENCE_CONFS`).  Every
+  call recomputes it; a changed signature re-infers and replaces the
+  entry.  A path whose status cannot be read is never cached: its
+  read infers, and fails, exactly as an uncached read does.
+- Never cached: a ``DataFrame`` or any other JVM-backed object — a
+  ``StructType`` is pure Python, so the cache outlives
+  ``stop_spark()``, and every call builds a fresh ``DataFrame``
+  (reading one table twice in a self-join needs distinct attribute
+  ids).
+- Still inferred on every read: readers whose contract *is*
+  inference — :func:`sql_path` (direct-path SQL), the CSV/JSON
+  readers, ``fs_read_schema_merge`` and the audit scripts' own reads.
 """
 
 from __future__ import annotations
 
+from py4j.java_gateway import JavaClass
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -42,14 +71,74 @@ _NANO_TS_COLUMNS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 #: parity we pin the pre-3.4 behavior: naive parquet micros ==
 #: session-local TIMESTAMP (session tz is UTC — value-identity).
 _NTZ_CONF = "spark.sql.parquet.inferTimestampNTZ.enabled"
+_NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
+
+#: session confs whose values change the schema footer inference
+#: returns — part of every cached schema's signature
+_INFERENCE_CONFS = (
+    _NANOS_CONF,
+    _NTZ_CONF,
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+
+#: path -> (signature, inferred StructType); see the module docstring
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
 
 
 def table_path(sf_dir: str, name: str) -> str:
     return f"{sf_dir.rstrip('/')}/{name}.parquet"
 
 
+def _signature(spark: SparkSession, path: str) -> tuple | None:
+    """What the schema inferred for ``path`` depends on, or None when
+    the path's status cannot be read (the caller then never caches)."""
+    sc = spark.sparkContext
+    # a fully-qualified JavaClass costs one py4j round trip, where
+    # ``spark._jvm.org.apache.hadoop.fs.Path`` resolves each package
+    # segment with a round trip of its own
+    jpath = JavaClass("org.apache.hadoop.fs.Path", sc._gateway._gateway_client)(path)
+    fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())
+    try:
+        root = fs.getFileStatus(jpath)
+    except Py4JJavaError:
+        return None
+    entries = []
+    todo = [("", root)]
+    while todo:
+        name, st = todo.pop()
+        entries.append((name, st.getLen(), st.getModificationTime()))
+        if st.isDirectory():
+            todo += [
+                (f"{name}/{c.getPath().getName()}", c)
+                for c in fs.listStatus(st.getPath())
+            ]
+    confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+    return tuple(sorted(entries)), confs
+
+
+def _schema(spark: SparkSession, path: str) -> StructType:
+    """The table's inferred schema: from the cache while the path's
+    signature is unchanged, else inferred (one Spark job) and cached."""
+    sig = _signature(spark, path)
+    hit = _SCHEMAS.get(path)
+    if sig is not None and hit is not None and hit[0] == sig:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    if sig is not None:
+        _SCHEMAS[path] = (sig, schema)
+    return schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one test table with deterministic timestamp semantics.
+
+    The schema comes from the module's schema cache: the first call
+    for a path infers it (one Spark job), every later call reads with
+    it and fires no job until the path's files or the inference confs
+    change (see the module docstring for the key, the invalidation,
+    and what is never cached).  Each call returns a new DataFrame.
 
     Session-conf contract (round-7 review made this explicit): this
     PERMANENTLY sets ``spark.sql.parquet.inferTimestampNTZ.enabled=
@@ -71,11 +160,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     nano_cols = _NANO_TS_COLUMNS.get(name, ())
     if nano_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        spark.conf.set(_NANOS_CONF, "true")
     spark.conf.set(_NTZ_CONF, "false")
-    df = spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    schema = _schema(spark, path)
+    df = spark.read.schema(schema).parquet(path)
     for c in nano_cols:
-        if isinstance(df.schema[c].dataType, LongType):
+        if isinstance(schema[c].dataType, LongType):
             df = df.withColumn(
                 c, F.timestamp_micros(F.expr(f"`{c}` div 1000"))
             )
@@ -88,15 +179,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # timezone keeps its semantics for every other query.
     # Top-level fields only — the test tables are flat; nested NTZ
     # inside struct/array would need a recursive rewrite.
-    if any(isinstance(f.dataType, TimestampNTZType) for f in df.schema.fields):
+    ntz = [f.name for f in schema.fields if isinstance(f.dataType, TimestampNTZType)]
+    if ntz:
         prev_tz = spark.conf.get("spark.sql.session.timeZone")
         spark.conf.set("spark.sql.session.timeZone", "UTC")
         try:
-            for field in df.schema.fields:
-                if isinstance(field.dataType, TimestampNTZType):
-                    df = df.withColumn(
-                        field.name, F.col(field.name).cast("timestamp")
-                    )
+            for c in ntz:
+                df = df.withColumn(c, F.col(c).cast("timestamp"))
         finally:
             spark.conf.set("spark.sql.session.timeZone", prev_tz)
     return df

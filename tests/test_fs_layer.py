@@ -351,6 +351,8 @@ def test_corrupt_file_contract(spark, sf_dir, tmp_path):
 
     import pytest as _pytest
 
+    from duckdb_hdfs_spark.sources.catalog import load_table
+
     audit_path = (
         Path(__file__).resolve().parent.parent / "scripts" / "corrupt_audit.py"
     )
@@ -368,12 +370,17 @@ def test_corrupt_file_contract(spark, sf_dir, tmp_path):
         with _pytest.raises(Exception):
             spark.read.parquet(str(p)).count()
 
-    d = tmp_path / "tbl"
+    d = tmp_path / "nation.parquet"
     spark.read.parquet(f"{sf_dir}/nation.parquet").repartition(2).write.parquet(
         str(d)
     )
     want = spark.read.parquet(str(d)).count()
+    # the catalog now holds this directory's schema; a truncated part
+    # added after that must still fail the next catalog read
+    assert load_table(spark, str(tmp_path), "nation").count() == want
     (d / "part-trunc.parquet").write_bytes(clean[: -audit.TRUNCATE_TAIL])
+    with _pytest.raises(Exception):
+        load_table(spark, str(tmp_path), "nation").count()
     (d / "part-zero.parquet").write_bytes(b"")
     (d / "notes.txt").write_text("stray\n")
 

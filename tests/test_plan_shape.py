@@ -28,18 +28,21 @@ def plan_of(df) -> str:
 #: shape assertion reads the same strings; assertions themselves are
 #: unchanged — this dedupes plan RENDERING, not anything the tests
 #: check.
-_KEY_PLANS: dict[str, tuple[str, str]] = {}
+#: Keyed on (name, sf_dir): a plan rendered over one data directory
+#: must never answer for another.
+_KEY_PLANS: dict[tuple[str, str], tuple[str, str]] = {}
 
 
 def key_plans(name: str, spark, sf_dir: str) -> tuple[str, str]:
-    if name not in _KEY_PLANS:
+    key = (name, sf_dir)
+    if key not in _KEY_PLANS:
         df = REGISTRY[name].spark(spark, sf_dir)
         qe = df._jdf.queryExecution()
-        _KEY_PLANS[name] = (
+        _KEY_PLANS[key] = (
             df._sc._jvm.PythonSQLUtils.explainString(qe, "formatted"),
             qe.optimizedPlan().toString(),
         )
-    return _KEY_PLANS[name]
+    return _KEY_PLANS[key]
 
 
 # --------------------------------------------------------------------------
