@@ -30,14 +30,41 @@ expression is evaluated exactly once, after any rebalance.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from collections.abc import Iterable, Sequence
+
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 __all__ = [
     "explode_nonnull_elems",
+    "local_frame",
     "parallel_checkpoints",
     "posexplode_nonnull_elems",
 ]
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: StructType | str
+) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples in ``schema``'s
+    field order), built as an Arrow table so it plans a
+    ``LocalTableScan``.  The only way the package turns Python rows
+    into a frame: ``createDataFrame(<list>, schema)`` plans a ``Scan
+    ExistingRDD`` over a pickled Python RDD, and running it forks
+    Python workers (0.3-0.5 s for a 120-row listing, against ~0.05 s
+    as a local relation).  Column names, types and nullability are
+    ``schema``'s; zero rows give an empty frame with that schema."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def parallel_checkpoints(*dfs: DataFrame) -> list[DataFrame]:

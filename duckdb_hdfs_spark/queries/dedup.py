@@ -30,6 +30,7 @@ from duckdb_hdfs_spark.operators.dedup import (
     norm_text,
     simhash_docs,
 )
+from duckdb_hdfs_spark.operators.genutil import local_frame
 from duckdb_hdfs_spark.queries import query
 from duckdb_hdfs_spark.queries._helpers import _t
 
@@ -1037,7 +1038,7 @@ def dedup_embedding_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFra
         )
         .agg(F.max("cos").alias("cos"))
     )
-    taus = spark.createDataFrame([(t,) for t in (0.3, 0.5, 0.7, 0.9)], "tau double")
+    taus = local_frame(spark, [(t,) for t in (0.3, 0.5, 0.7, 0.9)], "tau double")
     return (
         pairs.join(F.broadcast(taus))
         .groupBy("tau")

@@ -22,6 +22,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from duckdb_hdfs_spark.operators.genutil import local_frame
 from duckdb_hdfs_spark.queries import query
 from duckdb_hdfs_spark.sources.catalog import load_table, table_path
 from duckdb_hdfs_spark.sources.fs import HadoopFs
@@ -121,7 +122,7 @@ def fs_glob(spark: SparkSession, sf_dir: str) -> DataFrame:
     fs = HadoopFs(spark)
     infos = fs.glob(f"{sf_dir.rstrip('/')}/*.parquet")
     names = [(os.path.basename(fi.path),) for fi in infos]
-    return spark.createDataFrame(names, "file_name string")
+    return local_frame(spark, names, "file_name string")
 
 
 # --------------------------------------------------------------------------
@@ -150,8 +151,8 @@ def fs_ls(spark: SparkSession, sf_dir: str) -> DataFrame:
         for fi in fs.ls(sf_dir)
         if fi.path.endswith(".parquet")
     ]
-    return spark.createDataFrame(
-        rows, "file_name string, size_ok boolean, is_dir boolean"
+    return local_frame(
+        spark, rows, "file_name string, size_ok boolean, is_dir boolean"
     )
 
 
@@ -216,8 +217,8 @@ def fs_describe_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     for t in TABLES:
         for i, field in enumerate(load_table(spark, sf_dir, t).schema.fields):
             rows.append((t, field.name, i + 1))
-    return spark.createDataFrame(
-        rows, "table_name string, column_name string, pos bigint"
+    return local_frame(
+        spark, rows, "table_name string, column_name string, pos bigint"
     )
 
 
@@ -598,12 +599,34 @@ def fs_typed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle aggregates the SOURCE table directly — equality proves
     the round-trip changed nothing.
 
-    Scale shape: one scan each side of the write; the write is
-    parallel (one file per task) and the read-back aggregate
-    partial-aggregates as usual."""
+    Scale shape: one scan each side of the write, then a
+    partial-aggregating read-back.  The write and the read-back run
+    one task per written file, and the written files are as many as
+    the tasks of the scan — ONE when lineitem arrives as a single
+    row group, however many byte-range splits it plans.  The nine
+    source columns therefore pass through :func:`rebalance_cpu_heavy`
+    first: its footer probe counts the splits that carry rows, and
+    its graded exchange spreads the nested-type projection, the write
+    and the read-back over up to every core (one file per slot).  At
+    scale the scan already has more splits than cores and no exchange
+    is added."""
+    from duckdb_hdfs_spark.operators.rebalance import rebalance_cpu_heavy
+
     path = os.path.join(_SCRATCH, "typed_roundtrip")
     shutil.rmtree(path, ignore_errors=True)
-    li = load_table(spark, sf_dir, "lineitem")
+    li = rebalance_cpu_heavy(
+        load_table(spark, sf_dir, "lineitem").select(
+            "l_orderkey",
+            "l_linenumber",
+            "l_extendedprice",
+            "l_shipdate",
+            "l_quantity",
+            "l_discount",
+            "l_returnflag",
+            "l_linestatus",
+            "l_tax",
+        )
+    )
     typed = li.select(
         (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("k"),
         F.col("l_extendedprice").cast("decimal(18,6)").alias("price_dec"),

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from duckdb_hdfs_spark.operators.genutil import local_frame
 from duckdb_hdfs_spark.operators.layout import zorder_key, zorder_key_sql
 from duckdb_hdfs_spark.queries import query
 from duckdb_hdfs_spark.queries._helpers import _t
@@ -352,8 +353,8 @@ def layout_zonemap_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     anchor = F.lit(_ZM_ANCHOR).cast("date")
-    preds = spark.createDataFrame(
-        [(n, lo, hi) for n, lo, hi in _ZM_PREDS], "pred string, lo string, hi string"
+    preds = local_frame(
+        spark, _ZM_PREDS, "pred string, lo string, hi string"
     ).select(
         "pred",
         F.datediff(F.col("lo").cast("date"), anchor).alias("p_lo"),

@@ -16,6 +16,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from duckdb_hdfs_spark.operators.genutil import local_frame
 from duckdb_hdfs_spark.queries import query
 from duckdb_hdfs_spark.queries.events import sess_ctes
 from duckdb_hdfs_spark.sources.catalog import load_table
@@ -702,7 +703,7 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         if os.path.exists(state_dir):
             state = s.read.parquet(state_dir)
         else:
-            state = s.createDataFrame([], log_schema)
+            state = local_frame(s, [], log_schema)
         merged = (
             state.unionByName(batch_df)
             .groupBy("o_orderkey")
@@ -964,7 +965,8 @@ def streaming_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             TimestampType,
         )
 
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             StructType(
                 [

@@ -20,8 +20,13 @@ reads every call with ``spark.read.schema(s).parquet(path)``.
   its directory's mtime), plus the values of the parquet confs that
   change what inference returns (:data:`_INFERENCE_CONFS`).  Every
   call recomputes it; a changed signature re-infers and replaces the
-  entry.  A path whose status cannot be read is never cached: its
-  read infers, and fails, exactly as an uncached read does.
+  entry.  An entry inferred with ``nanosAsLong=false`` drops that
+  conf from its signature: inference under ``false`` raises on a
+  ``TIMESTAMP(NANOS)`` column, so a schema it returned has none and
+  reads the same under either value — the first ``events`` load,
+  which flips the conf to ``true``, re-infers no other table.  A path
+  whose status cannot be read is never cached: its read infers, and
+  fails, exactly as an uncached read does.
 - Never cached: a ``DataFrame`` or any other JVM-backed object — a
   ``StructType`` is pure Python, so the cache outlives
   ``stop_spark()``, and every call builds a fresh ``DataFrame``
@@ -76,7 +81,7 @@ _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 #: session confs whose values change the schema footer inference
 #: returns — part of every cached schema's signature
 _INFERENCE_CONFS = (
-    _NANOS_CONF,
+    _NANOS_CONF,  # first: see _nanos_free
     _NTZ_CONF,
     "spark.sql.parquet.binaryAsString",
     "spark.sql.parquet.int96AsTimestamp",
@@ -118,15 +123,25 @@ def _signature(spark: SparkSession, path: str) -> tuple | None:
     return tuple(sorted(entries)), confs
 
 
+def _nanos_free(sig: tuple) -> tuple:
+    """``sig`` with its ``nanosAsLong`` value (the first conf) blanked."""
+    files, confs = sig
+    return files, (None,) + confs[1:]
+
+
 def _schema(spark: SparkSession, path: str) -> StructType:
     """The table's inferred schema: from the cache while the path's
     signature is unchanged, else inferred (one Spark job) and cached."""
     sig = _signature(spark, path)
     hit = _SCHEMAS.get(path)
-    if sig is not None and hit is not None and hit[0] == sig:
+    if sig is not None and hit is not None and hit[0] in (sig, _nanos_free(sig)):
         return hit[1]
     schema = spark.read.parquet(path).schema
     if sig is not None:
+        # inferred under nanosAsLong=false: valid under either value
+        # (module docstring)
+        if sig[1][0] == "false":
+            sig = _nanos_free(sig)
         _SCHEMAS[path] = (sig, schema)
     return schema
 

@@ -25,6 +25,12 @@ and a verdict by the paired rule:
 - ``unresolved``: neither, and the parent's own spread is wider than
   the bound, unless every change run beats every parent run;
 - ``same``: otherwise.
+
+After the metric table it prints, per workload and registry key, each
+side's median wall: the median over that side's runs of the run's own
+median wall for the key (from the run's ``{"detail"}`` line).  The
+``--json`` records keep every run's detail line, so a comparison can
+show which keys moved and under what host load.
 """
 
 from __future__ import annotations
@@ -140,19 +146,72 @@ def format_rows(rows: list[dict]) -> str:
     return "\n".join(out)
 
 
+def key_walls(runs: list[dict]) -> list[dict]:
+    """One row per (workload, key): each side's median over its runs of
+    the run's median wall for the key.  Runs without a detail line
+    (failed runs) count for neither side."""
+    per: dict[tuple[str, str], dict[str, list[float]]] = {}
+    for r in runs:
+        walls = (r.get("detail") or {}).get("key_walls_s") or {}
+        for key, ws in walls.items():
+            if ws:
+                sides = per.setdefault((r["workload"], key), {})
+                sides.setdefault(r["side"], []).append(statistics.median(ws))
+    rows = []
+    for (workload, key), sides in sorted(per.items()):
+        row = {"workload": workload, "key": key}
+        for side in ("parent", "change"):
+            xs = sides.get(side)
+            row[side] = statistics.median(xs) if xs else None
+        p, c = row["parent"], row["change"]
+        row["ratio"] = c / p if p and c is not None else None
+        rows.append(row)
+    return rows
+
+
+def format_key_walls(rows: list[dict]) -> str:
+    out = [f"{'workload':<18} {'key':<34} {'parent s':>10} {'change s':>10} "
+           f"{'ratio':>6}"]
+    for r in rows:
+        def cell(v: float | None, fmt: str) -> str:
+            return "" if v is None else format(v, fmt)
+
+        out.append(f"{r['workload']:<18} {r['key']:<34} {cell(r['parent'], '.4f'):>10} "
+                   f"{cell(r['change'], '.4f'):>10} {cell(r['ratio'], '.3f'):>6}")
+    return "\n".join(out)
+
+
+def parse_output(stdout: str) -> tuple[dict | None, dict | None]:
+    """(metric values, detail) from one run's stdout: the result line
+    carries ``metrics``, the line before it is ``{"detail": ...}``.
+    Either is None when the run did not print it."""
+    metrics = detail = None
+    for line in stdout.strip().splitlines():
+        try:
+            rec = json.loads(line)
+        except ValueError:
+            continue
+        if not isinstance(rec, dict):
+            continue
+        if "detail" in rec:
+            detail = rec["detail"]
+        elif "metrics" in rec:
+            metrics = {name: m["value"] for name, m in rec["metrics"].items()}
+    return metrics, detail
+
+
 def run_once(checkout: str, command: list[str], workload: str, seed: int,
-             seconds: float, trace: int) -> dict | None:
-    """One benchmark run from ``checkout``'s root; its metric values,
-    or None when the run failed."""
+             seconds: float, trace: int) -> tuple[dict | None, dict | None]:
+    """One benchmark run from ``checkout``'s root: its metric values
+    (None when the run failed) and its detail line."""
     cmd = command + ["--workload", workload, "--seed", str(seed),
                      "--seconds", str(seconds), "--trace", str(trace)]
     proc = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
-    lines = proc.stdout.strip().splitlines()
-    if proc.returncode != 0 or not lines:
+    metrics, detail = parse_output(proc.stdout)
+    if proc.returncode != 0 or metrics is None:
         sys.stderr.write(proc.stderr[-2000:])
-        return None
-    result = json.loads(lines[-1])
-    return {name: m["value"] for name, m in result["metrics"].items()}
+        return None, detail
+    return metrics, detail
 
 
 def main() -> int:
@@ -178,19 +237,23 @@ def main() -> int:
     for workload in workloads:
         for pair, seed, order in schedule(args.pairs, args.seed):
             for side in order:
-                metrics = run_once(checkouts[side], bench["command"], workload,
-                                   seed, bench["run_seconds"], args.trace)
+                metrics, detail = run_once(checkouts[side], bench["command"],
+                                           workload, seed, bench["run_seconds"],
+                                           args.trace)
                 runs.append({"workload": workload, "pair": pair, "seed": seed,
-                             "side": side, "metrics": metrics})
+                             "side": side, "metrics": metrics, "detail": detail})
                 print(f"{workload} pair {pair} seed {seed} {side}: "
                       f"{'ok' if metrics else 'FAILED'}", file=sys.stderr, flush=True)
                 rows = summarize(runs, specs)
                 # rewritten after every run: an interrupted comparison keeps its runs
                 if args.json:
                     with open(args.json, "w") as fh:
-                        json.dump({"runs": runs, "summary": rows}, fh, indent=1)
+                        json.dump({"runs": runs, "summary": rows,
+                                   "key_walls": key_walls(runs)}, fh, indent=1)
 
     print(format_rows(rows))
+    print()
+    print(format_key_walls(key_walls(runs)))
     return 0
 
 

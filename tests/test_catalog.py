@@ -125,3 +125,63 @@ def test_load_table_after_session_restart(sf_dir):
         timeout=300,
     )
     assert out.returncode == 0, out.stderr[-3000:]
+
+
+def _with_nanos(spark, value: str):
+    """Set ``nanosAsLong`` to ``value``; return the restore callback."""
+    prev = spark.conf.get(catalog._NANOS_CONF)
+    spark.conf.set(catalog._NANOS_CONF, value)
+    return lambda: spark.conf.set(catalog._NANOS_CONF, prev)
+
+
+def test_nanos_file_cannot_infer_under_false(spark, tmp_path):
+    """The ground for dropping ``nanosAsLong=false`` from a signature:
+    inference under ``false`` raises on a TIMESTAMP(NANOS) column, so
+    no schema cached under ``false`` can hold one — and a failed
+    inference caches nothing."""
+    path = tmp_path / "ns.parquet"
+    ts = pa.array([1_000_000_001], type=pa.timestamp("ns"))
+    pq.write_table(pa.table({"ts": ts}), path, version="2.6")
+    restore = _with_nanos(spark, "false")
+    try:
+        try:
+            load_table(spark, str(tmp_path), "ns")
+        except Exception as e:  # noqa: BLE001 - the error class is the point
+            assert "PARQUET_TYPE_ILLEGAL" in str(e)
+        else:
+            raise AssertionError("a nanos column inferred under nanosAsLong=false")
+        assert str(path) not in catalog._SCHEMAS
+        spark.conf.set(catalog._NANOS_CONF, "true")
+        assert dict(load_table(spark, str(tmp_path), "ns").dtypes)["ts"] == "bigint"
+    finally:
+        restore()
+
+
+def test_tables_loaded_before_events_stay_warm(spark, sf_dir, tmp_path):
+    """A table inferred under ``nanosAsLong=false`` fires no job on its
+    next load after the ``events`` load flips the conf to ``true``; one
+    inferred under ``true`` keeps the conf in its signature and is
+    re-inferred when it goes back to ``false``."""
+    for t in ("nation", "region"):
+        shutil.copy(f"{sf_dir}/{t}.parquet", tmp_path / f"{t}.parquet")
+
+    def load(name):
+        return lambda: load_table(spark, str(tmp_path), name)
+
+    restore = _with_nanos(spark, "false")
+    try:
+        _, cold = _jobs(spark, "nanos-cold", load("nation"))
+        assert cold
+        load_table(spark, sf_dir, "events")
+        assert spark.conf.get(catalog._NANOS_CONF) == "true"
+        df, warm = _jobs(spark, "nanos-warm", load("nation"))
+        assert warm == []
+        assert df.count() == 25
+
+        _, cold = _jobs(spark, "nanos-true-cold", load("region"))
+        assert cold
+        spark.conf.set(catalog._NANOS_CONF, "false")
+        _, again = _jobs(spark, "nanos-true-flip", load("region"))
+        assert again, "an entry inferred under true must not serve false"
+    finally:
+        restore()

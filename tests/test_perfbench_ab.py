@@ -4,6 +4,8 @@ Python, no Spark."""
 from __future__ import annotations
 
 import importlib.util
+import json
+import math
 from pathlib import Path
 
 _path = Path(__file__).resolve().parent.parent / "scripts" / "perfbench_ab.py"
@@ -101,3 +103,38 @@ def test_format_rows_prints_one_line_per_metric():
     assert len(text) == 1 + len(rows) == 3
     assert "throughput_qpm" in text[1] and "2/2" in text[1]
     assert "latency_p50_s" in text[2] and "2/2" in text[2]
+
+
+def test_parse_output_keeps_the_detail_line():
+    detail = {"workload": "w", "key_walls_s": {"k": [0.5, 0.7]}, "nproc": 4}
+    stdout = "\n".join([
+        "noise from a child",
+        json.dumps({"detail": detail}),
+        json.dumps({"correct": True, "metrics": {"throughput_qpm": {"value": 61.0}}}),
+    ])
+    assert ab.parse_output(stdout) == ({"throughput_qpm": 61.0}, detail)
+    assert ab.parse_output(json.dumps({"detail": detail})) == (None, detail)
+    assert ab.parse_output("") == (None, None)
+
+
+def test_key_walls_take_each_sides_median_of_per_run_medians():
+    def run(side, pair, walls):
+        return {"workload": "w", "pair": pair, "side": side,
+                "metrics": {}, "detail": {"key_walls_s": walls}}
+
+    runs = [
+        run("parent", 0, {"a": [1.0, 3.0], "b": [0.3]}),
+        run("change", 0, {"a": [0.5, 0.5], "b": [0.1]}),
+        run("parent", 1, {"a": [4.0], "b": [0.3]}),
+        run("change", 1, {"a": [1.0], "b": [0.1]}),
+        # a failed run has no detail and counts for neither side
+        {"workload": "w", "pair": 2, "side": "change", "metrics": None,
+         "detail": None},
+    ]
+    rows = ab.key_walls(runs)
+    assert [r["key"] for r in rows] == ["a", "b"]
+    a, b = rows
+    assert a["parent"] == 3.0 and a["change"] == 0.75 and a["ratio"] == 0.25
+    assert b["parent"] == 0.3 and math.isclose(b["ratio"], 1 / 3)
+    text = ab.format_key_walls(rows).splitlines()
+    assert len(text) == 3 and "0.250" in text[1]

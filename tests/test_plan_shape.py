@@ -576,6 +576,161 @@ def test_rebalance_gated_on_volume(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
+def _probe_sizes(spark) -> tuple[int, int]:
+    """(cores, bytes): a single file of ``bytes`` plans more than
+    ``cores / 2`` and at most ``cores`` byte-range splits — from the
+    session's ``openCostInBytes`` / ``maxPartitionBytes``, so the
+    probe tests hold on any core count."""
+    cores = spark.sparkContext.defaultParallelism
+    if cores < 2:
+        pytest.skip("no split count lies in (cores/2, cores] below 2 cores")
+    conf = spark._jsparkSession.sessionState().conf()
+    split = min(conf.filesMaxPartitionBytes(), conf.filesOpenCostInBytes())
+    return cores, (cores // 2) * split + split // 2
+
+
+def _random_parquet(path, size: int, row_groups: int) -> None:
+    """~``size`` bytes of incompressible rows in ``row_groups`` groups."""
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = random.Random(7)
+    n = size // 1024
+    blobs = [rng.randbytes(1016) for _ in range(n)]
+    table = pa.table({"id": list(range(n)), "blob": blobs})
+    pq.write_table(
+        table, path, row_group_size=n // row_groups,
+        compression="none", use_dictionary=False,
+    )
+
+
+@pytest.fixture()
+def footer_reads(monkeypatch):
+    """Count the rebalance probe's footer reads."""
+    from duckdb_hdfs_spark.operators import rebalance
+
+    paths: list[str] = []
+    real = rebalance._row_groups
+
+    def counted(df, path):
+        paths.append(path)
+        return real(df, path)
+
+    monkeypatch.setattr(rebalance, "_row_groups", counted)
+    return paths
+
+
+def _splits_in_probe_band(df, cores: int) -> int:
+    s = df.rdd.getNumPartitions()
+    assert cores // 2 < s <= cores, f"fixture planned {s} splits on {cores} cores"
+    return s
+
+
+def test_rebalance_counts_row_carrying_splits(spark, tmp_path, footer_reads):
+    """A single-row-group parquet file that plans more than cores/2
+    byte-range splits carries its rows in ONE of them: the footer probe
+    bounds the split count by the row groups and the frame is graded
+    like a one-split scan.  The same rows in at least ``cores`` row
+    groups already spread over the splits and are left alone."""
+    from duckdb_hdfs_spark.operators.rebalance import (
+        BYTES_PER_SLOT,
+        rebalance_cpu_heavy,
+    )
+
+    cores, size = _probe_sizes(spark)
+    one, many = tmp_path / "one.parquet", tmp_path / "many.parquet"
+    _random_parquet(one, size, 1)
+    _random_parquet(many, size, cores)
+
+    df = spark.read.parquet(str(one))
+    _splits_in_probe_band(df, cores)
+    est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    slots = min(est // BYTES_PER_SLOT, cores)
+    assert slots >= 2
+    assert f"RoundRobinPartitioning({slots})" in plan_of(rebalance_cpu_heavy(df))
+    assert len(footer_reads) == 1
+
+    df = spark.read.parquet(str(many))
+    _splits_in_probe_band(df, cores)
+    assert rebalance_cpu_heavy(df) is df
+    assert len(footer_reads) == 2
+
+
+def test_rebalance_probe_reads_no_footer_it_cannot_use(
+    spark, sf_dir, tmp_path, footer_reads
+):
+    """Inputs the footer probe cannot bound keep today's answer with no
+    footer read: a CSV file, and more parquet files than cores; each
+    plans between cores/2 and cores splits and grades to 2 or more
+    slots.  A frame whose splits already pass the guard, and a frame
+    that grades to one slot, read no footer either."""
+    from duckdb_hdfs_spark.operators.rebalance import (
+        BYTES_PER_SLOT,
+        rebalance_cpu_heavy,
+    )
+    from duckdb_hdfs_spark.sources.catalog import load_table
+
+    cores, size = _probe_sizes(spark)
+    csv = tmp_path / "rows.csv"
+    line = "x" * 1023 + "\n"
+    csv.write_text(line * (size // len(line)))
+    df = spark.read.schema("v string").csv(str(csv))
+    _splits_in_probe_band(df, cores)
+    assert rebalance_cpu_heavy(df) is df
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    parts = tmp_path / "parts"
+    parts.mkdir()
+    for i in range(cores + 1):
+        _random_parquet(parts / f"part-{i:05d}.parquet", BYTES_PER_SLOT, 1)
+    df = spark.read.parquet(str(parts))
+    _splits_in_probe_band(df, cores)
+    est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    assert est >= 2 * BYTES_PER_SLOT
+    assert rebalance_cpu_heavy(df) is df
+
+    docs = load_table(spark, sf_dir, "documents").select("text")
+    rebalance_cpu_heavy(docs)
+    assert footer_reads == []
+
+    one = tmp_path / "one.parquet"
+    _random_parquet(one, size, 1)
+    df = spark.read.parquet(str(one))
+    _splits_in_probe_band(df, cores)
+    est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    assert rebalance_cpu_heavy(df, bytes_per_slot=est) is df
+    assert footer_reads == []
+
+
+def test_typed_roundtrip_writes_one_file_per_slot(spark, sf_dir):
+    """fs_typed_roundtrip's write runs on the rebalanced slots: at the
+    test scale factor it writes more than one part file whenever
+    lineitem's nine source columns grade to two or more slots."""
+    import glob
+    import os
+
+    from duckdb_hdfs_spark.operators.rebalance import BYTES_PER_SLOT
+    from duckdb_hdfs_spark.queries.fslayer import _SCRATCH
+    from duckdb_hdfs_spark.sources.catalog import load_table
+
+    src = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_linenumber", "l_extendedprice", "l_shipdate",
+        "l_quantity", "l_discount", "l_returnflag", "l_linestatus", "l_tax",
+    )
+    est = int(src._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    slots = min(est // BYTES_PER_SLOT, spark.sparkContext.defaultParallelism)
+    if slots < 2:
+        pytest.skip(f"lineitem grades to {slots} slot here")
+    REGISTRY["fs_typed_roundtrip"].spark(spark, sf_dir)
+    parts = glob.glob(os.path.join(_SCRATCH, "typed_roundtrip", "part-*.parquet"))
+    assert len(parts) > 1
+
+
+# --------------------------------------------------------------------------
 def test_ivf_cell_assignment_is_map_side(spark, sf_dir):
     """IVF corpus cell assignment must be a map-side expression over
     the broadcast centroid array — never a shuffle of the corpus on
