@@ -223,7 +223,7 @@ def bucketed_pairs(
     grouped = bucket_cells(rows, bucket_cols, id_col, chunk, n_rows=n_rows)
     return grouped.select(
         *bucket_cols,
-        F.explode(_pair_enum_expr()).alias("_pr"),
+        F.explode(F.expr(_PAIR_ENUM_SQL)).alias("_pr"),
     ).select(
         *bucket_cols,
         F.col("_pr.a").alias("id_a"),
@@ -231,35 +231,21 @@ def bucketed_pairs(
     )
 
 
-#: memoized pair-enumeration Column: the expression is caller-
-#: independent (always over the ``ids_a``/``ids_b``/``_i``/``_j``
-#: cell columns), and the former nested-lambda Column build cost
-#: ~150 py4j driver round-trips per bucketed_pairs call site
-#: (round 14 — the lsh_band_keys construction-collapse treatment;
-#: the parsed tree is the identical transform/flatten/named_struct
-#: shape).
-_PAIR_ENUM_MEMO: list = []
-
-
-def _pair_enum_expr() -> "F.Column":
-    """Pair array for one cell row: diagonal cell (_i == _j) → ids_a
-    is the whole chunk, ids_b empty → in-chunk (lo, hi) pairs from
-    the sorted list; off-diagonal → cross product of the two chunks,
-    pair normalized by least/greatest."""
-    if _PAIR_ENUM_MEMO:
-        return _PAIR_ENUM_MEMO[0]
-    intra = (
-        "flatten(transform(ids_a, (lo, i) -> "
-        "transform(slice(ids_a, i + 2, greatest(size(ids_a) - i - 1, 0)), "
-        "hi -> named_struct('a', lo, 'b', hi))))"
-    )
-    cross = (
-        "flatten(transform(ids_a, x -> transform(ids_b, y -> "
-        "named_struct('a', least(x, y), 'b', greatest(x, y)))))"
-    )
-    col = F.expr(f"CASE WHEN _i = _j THEN {intra} ELSE {cross} END")
-    _PAIR_ENUM_MEMO.append(col)
-    return col
+#: pair array for one cell row: diagonal cell (_i == _j) → ids_a is
+#: the whole chunk, ids_b empty → in-chunk (lo, hi) pairs from the
+#: sorted list; off-diagonal → cross product of the two chunks, pair
+#: normalized by least/greatest.  One SQL string parsed by one
+#: ``F.expr`` per call: the former nested-lambda Column build cost ~150
+#: py4j driver round-trips per bucketed_pairs call site (round 14), and
+#: a string, unlike a Column, outlives the session that parsed it.
+_PAIR_ENUM_SQL = (
+    "CASE WHEN _i = _j THEN "
+    "flatten(transform(ids_a, (lo, i) -> "
+    "transform(slice(ids_a, i + 2, greatest(size(ids_a) - i - 1, 0)), "
+    "hi -> named_struct('a', lo, 'b', hi)))) "
+    "ELSE flatten(transform(ids_a, x -> transform(ids_b, y -> "
+    "named_struct('a', least(x, y), 'b', greatest(x, y))))) END"
+)
 
 
 def bucket_cells(

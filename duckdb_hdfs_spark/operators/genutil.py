@@ -80,13 +80,20 @@ def parallel_checkpoints(*dfs: DataFrame) -> list[DataFrame]:
     checkpointed frames in input order; Spark's scheduler interleaves
     the jobs (FIFO back-fill).  Callers pass only MUTUALLY INDEPENDENT
     frames — a frame depending on another's checkpoint must stay in a
-    later wave."""
-    if len(dfs) == 1:
-        return [dfs[0].localCheckpoint(eager=True)]
+    later wave.  The workers inherit the caller's local properties (job
+    group, description, scheduler pool) and job tags, so cancelling or
+    tagging the caller's jobs covers the checkpoint jobs too."""
+    if len(dfs) <= 1:
+        return [df.localCheckpoint(eager=True) for df in dfs]
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    checkpoint = inheritable_thread_target(dfs[0].sparkSession)(
+        lambda df: df.localCheckpoint(eager=True)
+    )
     with ThreadPoolExecutor(max_workers=len(dfs)) as pool:
-        return list(pool.map(lambda df: df.localCheckpoint(eager=True), dfs))
+        return list(pool.map(checkpoint, dfs))
 
 
 def explode_nonnull_elems(

@@ -17,6 +17,7 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
+import functools
 import hashlib
 
 from pyspark.sql import DataFrame, Window
@@ -57,16 +58,6 @@ def lsh_signature(emb) -> "F.Column":
     return sig
 
 
-#: memoized band-keys Columns by input-expression SQL text: the
-#: expression embeds 12 planes × 64 literal dims, and building it
-#: Column-by-Column cost ~5,000 py4j round-trips ≈ 4.8s of DRIVER
-#: time per call site (profiled round 13: sim_lsh_ann spent 9.6s of
-#: its 11.7s DataFrame build inside two lsh_band_keys calls).  One
-#: F.expr over a generated SQL string is a single round-trip to the
-#: same Catalyst tree, and the memo makes bench reps free.
-_BAND_KEYS_MEMO: dict = {}
-
-
 def lsh_band_keys(emb) -> "F.Column":
     """Banded signature: LSH_BANDS keys of LSH_BAND_BITS sign bits
     each, offset so keys from different bands never collide.
@@ -80,14 +71,21 @@ def lsh_band_keys(emb) -> "F.Column":
     identical Catalyst tree the former per-plane Column arithmetic
     built (zip_with + sequential aggregate fold per plane, same cast
     and comparison shape), minus ~5,000 py4j round-trips of driver
-    latency per call (round 13; see memo note above)."""
+    latency per call (round 13: sim_lsh_ann spent 9.6s of its 11.7s
+    DataFrame build inside two lsh_band_keys calls)."""
     # string and Column args normalize through the SAME validation +
     # backquoting, so 'ce' and F.col("ce") share one memo entry and a
     # qualified/expression string can never splice into the generated
     # SQL unvalidated (round-13 advisor)
     name = _backquoted_ident(emb if isinstance(emb, str) else str(emb._jc))
-    if name in _BAND_KEYS_MEMO:
-        return _BAND_KEYS_MEMO[name]
+    return F.expr(_band_keys_sql(name))
+
+
+@functools.cache
+def _band_keys_sql(name: str) -> str:
+    """The generated SQL of :func:`lsh_band_keys` over the backquoted
+    column ``name`` — memoized as a string, which, unlike a Column,
+    outlives the session that parsed it."""
     planes = hyperplanes()
     keys = []
     for b in range(LSH_BANDS):
@@ -104,9 +102,7 @@ def lsh_band_keys(emb) -> "F.Column":
                 f"(CASE WHEN {proj} > 0.0D THEN {1 << r} ELSE 0 END)"
             )
         keys.append("(" + " + ".join(terms) + f" + {b * (1 << LSH_BAND_BITS)})")
-    col = F.expr("array(" + ", ".join(keys) + ")")
-    _BAND_KEYS_MEMO[name] = col
-    return col
+    return "array(" + ", ".join(keys) + ")"
 
 
 def _backquoted_ident(s: str) -> str:

@@ -10,6 +10,7 @@ driver's sf0.01 run.
 from __future__ import annotations
 
 import math
+import os
 from dataclasses import dataclass, field
 
 import duckdb
@@ -23,9 +24,11 @@ def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     """Register the test tables as views, as the driver does."""
     con = duckdb.connect()
     for name in TABLES:
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM '{table_path(sf_dir, name)}'"
-        )
+        path = table_path(sf_dir, name)
+        # DuckDB does not glob a bare directory path: view its part files
+        if os.path.isdir(path):
+            path += "/*.parquet"
+        con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{path}'")
     return con
 
 
@@ -123,8 +126,14 @@ class CompareResult:
 def compare(
     name: str, spark_df: DataFrame, con: duckdb.DuckDBPyConnection, oracle_sql: str
 ) -> CompareResult:
-    sp = _canon(spark_df.toPandas())
-    du = _canon(con.execute(oracle_sql).fetchdf())
+    return compare_frames(
+        name, _canon(spark_df.toPandas()), _canon(con.execute(oracle_sql).fetchdf())
+    )
+
+
+def compare_frames(name: str, sp: pd.DataFrame, du: pd.DataFrame) -> CompareResult:
+    """:func:`compare` on two frames already in :func:`_canon` form;
+    ``du`` plays the oracle."""
     mism: list[str] = []
     if list(sp.columns) != list(du.columns):
         mism.append(f"columns: spark={list(sp.columns)} oracle={list(du.columns)}")

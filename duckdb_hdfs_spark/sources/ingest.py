@@ -10,24 +10,24 @@ once where data enters, never re-paid per operator (an in-operator
 guard would cost an extra pass/shuffle in EVERY downstream op at
 100 TB).
 
-The audits that measured each rule's necessity (scripts/, all
-full-registry green under the rule):
+The audits that measured each rule's necessity (``audit.CLASSES``,
+all full-registry green under the rule):
 
-- REPLAY-DEDUPE (``dup_audit.KEY_GRAIN``, round 10): at-least-once
+- REPLAY-DEDUPE (the ``dup`` class's rule, round 10): at-least-once
   delivery leaves exact full-row twins; key-identity operators
   (candidate pairing, probe selection, centroid seeding) treat the
   id as the entity and legitimately disagree cross-engine on
   multiplicities.  Rule: one row per key at ingest.
-- DIMENSION ENFORCEMENT (``ragged_audit.FIXED_DIM``, round 10): a
+- DIMENSION ENFORCEMENT (the ``ragged`` class's rule, round 10): a
   crashed writer / mid-migration table mixes embedding dims;
   PQ subspaces, per-dimension panels and eigenbases assume one d.
   Rule: keep exactly the contracted dimensionality.
-- FINITE_MEASURES (``naninf_audit``, round 11): Spark canonical-NaN
+- FINITE_MEASURES (the ``naninf`` class's rule, round 11): Spark canonical-NaN
   groups/sorts and DECIMAL-casts to NULL where DuckDB raises —
   engine contracts, not bugs.  Rule: non-finite scalars → NULL (the
   NULL lane every operator provably handles); vectors with any
   non-finite component → quarantined.
-- EVENT-TIME CLAMP (``ts_extreme_audit.WATERMARK_POISONED``, rounds
+- EVENT-TIME CLAMP (the ``ts_extreme`` class, rounds
   10-11): one far-future timestamp advances a stream's watermark
   past the entire real stream and mass-drops live sessions
   (measured 450 vs 828).  Rule: clamp event time at now + slack

@@ -7,12 +7,10 @@ formulations of the rule can never drift apart silently)."""
 
 from __future__ import annotations
 
-import importlib.util as _ilu
-from pathlib import Path as _Path
-
 import pytest
 from pyspark.sql import functions as F
 
+from duckdb_hdfs_spark import audit
 from duckdb_hdfs_spark.sources.ingest import (
     dedupe_replays,
     enforce_dimension,
@@ -85,21 +83,10 @@ def test_quarantine_nonfinite_vectors(spark):
 
 
 # --------------------------------------------------------------------------
-_nf_spec = _ilu.spec_from_file_location(
-    "naninf_audit",
-    _Path(__file__).resolve().parent.parent / "scripts" / "naninf_audit.py",
-)
-_nf_audit = _ilu.module_from_spec(_nf_spec)
-_nf_spec.loader.exec_module(_nf_audit)
-
-
 @pytest.fixture(scope="module")
 def nf_dirs(sf_dir, tmp_path_factory):
-    raw = tmp_path_factory.mktemp("ing_nf_raw")
-    fin = tmp_path_factory.mktemp("ing_nf_fin")
-    _nf_audit.build_naninf_dir(sf_dir, str(raw))
-    _nf_audit.build_finite_dir(str(raw), str(fin))
-    return str(raw), str(fin)
+    dirs = audit.build("naninf", sf_dir, str(tmp_path_factory.mktemp("ing_nf")))
+    return dirs.perturbed, dirs.rule
 
 
 def test_finite_measures_matches_audit_rule_scalars(spark, nf_dirs):

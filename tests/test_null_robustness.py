@@ -1,21 +1,13 @@
-"""NULL-injection robustness audit (round 9): deterministically NULL
-2% of the value columns (and 1% of document texts) in a copy of
-sf0.001, then require Spark↔DuckDB parity for every operator the
-original audit caught diverging — NULL text reaching the shingle
-pipeline, NULL values inside rank machinery, avg-vs-count(*)
-denominators, NULL payloads crashing Arrow workers, concat_ws
-silently dropping a NULL CSV field.  The production data has no
-NULLs, so these fixes are invisible to the driver gate; this module
-keeps them from regressing.
+"""Adversarial-data regression gate over ``duckdb_hdfs_spark.audit``.
 
-text_dsir_weights joined the pinned set in round 13: the two-round
-"measure-zero rounded-transcendental" holdout was misdiagnosed — the
-per-bucket rounded-ln weights are engine-identical (measured ≥4e-8
-off every 6-dp boundary, eight orders above ulp); the real bug was
-the FINAL round running on the double cast of an exact 6-dp decimal
-sum, so any doc landing exactly on a 4-dp half boundary (~1/100 —
-this NULL pattern produced five) rounded by binary-representation
-luck.  Fixed by rounding the DECIMAL sum on both engines.
+Default lane: every class's pinned keys, each through ``audit.check``
+on a perturbed copy built once per class.  Slow lane (``-m slow``):
+each class over the full registry, whose red set must equal the
+recorded one — a new red key and a newly fixed key both fail.
+
+The pinned tests keep the ids they had when each class had its own
+fixture and test function: :func:`_pinned` builds one parametrized test
+per (class, check) pair.
 """
 
 from __future__ import annotations
@@ -23,179 +15,97 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from duckdb_hdfs_spark.oracle import compare, duckdb_connection
+from duckdb_hdfs_spark import audit
 from duckdb_hdfs_spark.queries import load_all
 
-TABLES = (
-    "region nation customer supplier part orders lineitem "
-    "events documents embeddings"
-).split()
 
-#: the operators the round-9 NULL audit caught diverging (fixed) plus
-#: close siblings that share the patched machinery.
-AUDITED = [
-    "dedup_lsh_bucket_stats",
-    "dedup_lsh_band_sweep",
-    "dedup_minhash_lsh",
-    "dedup_prefix_groups",
-    "text_langid",
-    "text_langid_metrics",
-    "text_repetition",
-    "stats_spearman_corr",
-    "stats_kruskal_wallis",
-    "stats_mann_whitney",
-    "stats_ks_test",
-    "layout_hilbert_tiles",
-    "q1_pricing_summary",
-    "win_running_total",
-    "mm_binary_meta",
-    "mm_decode_features",
-    "mm_resize",
-    "mm_frame_sample",
-    "fs_read_csv_malformed",
-    # round-13 addition: the former 324/325 holdout, fixed by rounding
-    # the decimal sum instead of its double cast (module docstring)
-    "text_dsir_weights",
-]
+@pytest.fixture(scope="session")
+def audit_check(spark, sf_dir, tmp_path_factory):
+    """``(class, key) -> audit.check(...)``, building each class's
+    copies on first use and checking each key once, so a class's
+    parity and invariance tests share one check."""
+    dirs: dict[str, audit.Dirs] = {}
+    results: dict[tuple[str, str], list] = {}
+
+    def get(cls: str, key: str) -> list:
+        if cls not in dirs:
+            dirs[cls] = audit.build(cls, sf_dir, str(tmp_path_factory.mktemp(cls)))
+        if (cls, key) not in results:
+            results[cls, key] = audit.check(spark, cls, key, dirs[cls])
+        return results[cls, key]
+
+    return get
 
 
-def _null_pct(col: str, pct: int, key: str) -> str:
-    return (
-        f"CASE WHEN ('0x' || substr(md5('{col}' || CAST({key} AS VARCHAR)),"
-        f" 1, 4))::BIGINT % 100 < {pct} THEN NULL ELSE {col} END AS {col}"
-    )
+def _pinned(cls: str, keys=None, slot: int = 0):
+    """A test over ``keys`` (default: the class's pinned keys) asserting
+    ``audit.check`` result ``slot``: 0 parity or both-raise, 1 invariance."""
+
+    @pytest.mark.parametrize("name", audit.CLASSES[cls].pinned if keys is None else keys)
+    def test(name, audit_check):
+        result = audit_check(cls, name)[slot]
+        assert result.ok, str(result)
+
+    return test
 
 
-_SPECS = {
-    "lineitem": [
-        "l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-        _null_pct("l_quantity", 2, "l_orderkey*10+l_linenumber"),
-        _null_pct("l_extendedprice", 2, "l_orderkey*10+l_linenumber"),
-        _null_pct("l_discount", 2, "l_orderkey*10+l_linenumber"),
-        _null_pct("l_tax", 2, "l_orderkey*10+l_linenumber"),
-        "l_returnflag", "l_linestatus", "l_shipdate",
-    ],
-    "orders": [
-        "o_orderkey", "o_custkey", "o_orderstatus",
-        _null_pct("o_totalprice", 2, "o_orderkey"),
-        "o_orderdate", "o_orderpriority",
-    ],
-    "events": [
-        "event_id", "ts", "user_id", "event_type",
-        _null_pct("value", 2, "event_id"),
-        "props",
-    ],
-    "documents": [
-        "doc_id",
-        _null_pct("text", 1, "doc_id"),
-        "lang", "source", "n_chars",
-    ],
-}
+def _ruled(cls: str, under_rule: bool) -> list[str]:
+    rule = audit.CLASSES[cls].rule
+    return [k for k in audit.CLASSES[cls].pinned if (k in rule.keys) == under_rule]
 
 
-@pytest.fixture(scope="module")
-def null_sf_dir(sf_dir, tmp_path_factory) -> str:
-    dst = tmp_path_factory.mktemp("testdata_nulls")
-    con = duckdb.connect()
-    for t in TABLES:
-        cols = _SPECS.get(t)
-        sel = ", ".join(cols) if cols else "*"
-        con.execute(
-            f"COPY (SELECT {sel} FROM '{sf_dir}/{t}.parquet') "
-            f"TO '{dst}/{t}.parquet' (FORMAT PARQUET)"
-        )
-    con.close()
-    return str(dst)
-
-
-@pytest.fixture(scope="module")
-def null_oracle_con(null_sf_dir):
-    con = duckdb_connection(null_sf_dir)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", AUDITED)
-def test_null_injected_parity(name, spark, null_sf_dir, null_oracle_con):
-    qd = load_all()[name]
-    result = compare(
-        name, qd.spark(spark, null_sf_dir), null_oracle_con, qd.oracle
-    )
-    assert result.ok, str(result)
-
-
-# --------------------------------------------------------------------------
-# tiny-data audit (round 9): 30-row tables exercise the degenerate
-# shapes the sf data never hits — 1-row hours inside the BH-FDR z
-# (integer /0 → ANSI ArithmeticException), LATERAL's driving-table
-# semantics under broken referential integrity, and a ±1%-rank
-# corridor that contains no data element.  Pin the fixed keys.
-TINY_AUDITED = [
-    "stats_bh_fdr",
-    "sql_lateral_join",
-    "sketch_quantiles_approx",
-    "stats_welch_ttest",
-    "stats_anova_oneway",
-    "stats_brown_forsythe",
-    "ev_nelson_aalen",
-    "stats_kendall_tau",
-]
-
-
-@pytest.fixture(scope="module")
-def tiny_sf_dir(sf_dir, tmp_path_factory) -> str:
-    dst = tmp_path_factory.mktemp("testdata_tiny")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"COPY (SELECT * FROM '{sf_dir}/{t}.parquet' LIMIT 30) "
-            f"TO '{dst}/{t}.parquet' (FORMAT PARQUET)"
-        )
-    con.close()
-    return str(dst)
-
-
-@pytest.fixture(scope="module")
-def tiny_oracle_con(tiny_sf_dir):
-    con = duckdb_connection(tiny_sf_dir)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", TINY_AUDITED)
-def test_tiny_data_parity(name, spark, tiny_sf_dir, tiny_oracle_con):
-    qd = load_all()[name]
-    result = compare(
-        name, qd.spark(spark, tiny_sf_dir), tiny_oracle_con, qd.oracle
-    )
-    assert result.ok, str(result)
-
-
-# --------------------------------------------------------------------------
-# unicode-injection audit (round 9): Java's full case mapping vs
-# DuckDB/utf8proc's simple 1:1 mapping diverge on special-cased
-# codepoints (U+0130 İ → 'i'+combining-dot vs 'i'; Σ → contextual ς
-# vs σ), silently splitting every token, shingle hash, and content
-# digest.  functions.hashing.fold_lower pre-translates the divergent
-# codepoints; these tests pin the shim and the keys the audit caught.
-UNICODE_AUDITED = [
-    "dedup_exact",
-    "dedup_keep_best",
-    "dedup_simhash",
-    "dedup_winnowing",
-    "text_fingerprint",
-    "text_chunk_windows",
-    "text_ngram_freq",
-    "text_tfidf_topk",
-    "text_token_stats",
-    "bpe_pair_counts",
-    "corpus_source_overlap",
-]
-
-_NASTY = (
-    "İstanbul STRAßE ΣΟΣ café nbsp\ttab　ideo "
-    "ÀÉÎÕÜ ǅungla \U0001F600 中文"
+test_null_injected_parity = _pinned("null")
+test_tiny_data_parity = _pinned("tiny")
+test_unicode_injected_parity = _pinned("unicode")
+test_extreme_values_parity = _pinned("extreme")
+test_extreme_values_domain_bound_raises_on_both_engines = _pinned(
+    "extreme", sorted(audit.CLASSES["extreme"].both_raise)
 )
+test_vertical_tab_injected_parity = _pinned("ws")
+test_zero_row_parity = _pinned("empty")
+test_timestamp_extremes_parity = _pinned("ts_extreme")
+test_constant_data_parity = _pinned("const")
+test_single_row_parity = _pinned("onerow")
+test_all_null_parity = _pinned("allnull")
+test_duplicated_rows_parity = _pinned("dup")
+test_negative_measures_parity = _pinned("negative")
+test_ragged_raw_parity = _pinned("ragged", _ruled("ragged", False))
+test_ragged_dim_enforced_parity = _pinned("ragged", _ruled("ragged", True))
+test_date_extremes_parity = _pinned("date_extreme")
+test_malformed_json_parity = _pinned("json")
+test_naninf_finite_measures_parity = _pinned("naninf")
+test_roworder_parity = _pinned("roworder")
+test_roworder_invariance = _pinned("roworder", slot=1)
+test_filesplit_parity = _pinned("filesplit")
+test_filesplit_invariance = _pinned("filesplit", slot=1)
+test_schema_drift_parity = _pinned("schemadrift")
+test_schema_drift_invariance = _pinned("schemadrift", slot=1)
+
+
+@pytest.mark.parametrize("cls", audit.CLASSES)
+def test_class_is_current(cls):
+    """Every key a class names is a registry key — a renamed operator
+    would silently drop its audit coverage."""
+    c = audit.CLASSES[cls]
+    named = set(c.pinned) | c.both_raise | c.skip | (c.invariance or set())
+    named |= (c.rule.keys or set()) if c.rule else set()
+    assert named - set(load_all()) == set()
+
+
+def test_naninf_rule_lists_are_current(sf_dir):
+    """Every column the naninf class injects into is DOUBLE in the real
+    testdata schema."""
+    con = duckdb.connect()
+    for t, (_key, cols) in audit._NANINF_MEASURES.items():
+        desc = {
+            c: ty
+            for c, ty, *_ in con.execute(
+                f"DESCRIBE SELECT * FROM '{sf_dir}/{t}.parquet'"
+            ).fetchall()
+        }
+        for c in cols:
+            assert desc.get(c) == "DOUBLE", (t, c, desc.get(c))
+    con.close()
 
 
 def test_fold_lower_cross_engine(spark):
@@ -206,980 +116,45 @@ def test_fold_lower_cross_engine(spark):
     from duckdb_hdfs_spark.functions.hashing import fold_lower, fold_lower_sql
 
     got = (
-        spark.createDataFrame([(_NASTY,)], "t string")
+        spark.createDataFrame([(audit.NASTY,)], "t string")
         .select(fold_lower(F.col("t")))
         .collect()[0][0]
     )
     con = duckdb.connect()
     want = con.execute(
-        f"SELECT {fold_lower_sql('?')}", [_NASTY]
+        f"SELECT {fold_lower_sql('?')}", [audit.NASTY]
     ).fetchone()[0]
     con.close()
     assert got == want
 
 
-@pytest.fixture(scope="module")
-def unicode_sf_dir(sf_dir, tmp_path_factory) -> str:
-    dst = tmp_path_factory.mktemp("testdata_unicode")
-    con = duckdb.connect()
-    suffix = _NASTY.replace("'", "")
-    con.execute(
-        f"""
-        COPY (SELECT doc_id,
-                     CASE WHEN doc_id % 10 = 0 THEN text || ' {suffix}'
-                          ELSE text END AS text,
-                     lang, source, n_chars
-              FROM '{sf_dir}/documents.parquet')
-        TO '{dst}/documents.parquet' (FORMAT PARQUET)
-        """
-    )
-    for t in TABLES:
-        if t != "documents":
-            con.execute(
-                f"COPY (SELECT * FROM '{sf_dir}/{t}.parquet') "
-                f"TO '{dst}/{t}.parquet' (FORMAT PARQUET)"
-            )
-    con.close()
-    return str(dst)
-
-
-@pytest.fixture(scope="module")
-def unicode_oracle_con(unicode_sf_dir):
-    con = duckdb_connection(unicode_sf_dir)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", UNICODE_AUDITED)
-def test_unicode_injected_parity(name, spark, unicode_sf_dir, unicode_oracle_con):
-    qd = load_all()[name]
-    result = compare(
-        name, qd.spark(spark, unicode_sf_dir), unicode_oracle_con, qd.oracle
-    )
-    assert result.ok, str(result)
-
-
-# --------------------------------------------------------------------------
-# Extreme-values audit (round 10): empty/whitespace/single-char/50k-char
-# documents and 0 / -0.0 / ±1e12 / 1e-12 event values.  The original
-# sweep caught 20 divergences: 16 plain-sum sites crashing both engines
-# at the DECIMAL(18,6) row cast on a plausible 1e12 metric (fixed —
-# widened to DECIMAL(28,6); the sum never multiplies, so exactness is
-# unchanged), an empty-document /0 crash in text_code_detection (fixed
-# — mirrored nullif), and the power-sum / decimal-product keys whose
-# |value| < 1e12 domain is set by the 38-digit decimal ceiling itself
-# ((18,6)² = (37,12) is the widest exact square): those must REJECT the
-# value identically on both engines, pinned as parity-in-failure below.
-# streaming_user_totals carries a documented round-grain magnitude
-# bound (ulp(1e12) ≈ the 4dp grain) and is deliberately not pinned;
-# text_dsir_weights left that set in round 13 (decimal-sum rounding
-# fix, see module docstring) and is pinned in AUDITED above.
-
-import importlib.util as _ilu
-from pathlib import Path as _Path
-
-_spec = _ilu.spec_from_file_location(
-    "extreme_audit",
-    _Path(__file__).resolve().parent.parent / "scripts" / "extreme_audit.py",
-)
-_extreme_audit = _ilu.module_from_spec(_spec)
-_spec.loader.exec_module(_extreme_audit)
-
-EXTREME_AUDITED = [
-    "ev_tumbling_counts",
-    "ev_top_users",
-    "ev_user_decile",
-    "ev_linear_attribution",
-    "win_moving_avg",
-    "win_time_range_frame",
-    "win_value_range_frame",
-    "fs_compact_small_files",
-    "fs_read_json_nested",
-    "text_code_detection",
-    "unpivot_event_metrics",
-    "skew_salted_event_stats",
-    "time_decay_engagement",
-    "range_join_view_purchases",
-    "streaming_windowed_counts",
-    "streaming_sliding_counts",
-    "streaming_session_windows",
-    "streaming_static_enrich",
-    "streaming_partitioned_sink",
-    "streaming_complete_topk",
-    # text keys exercised by the empty/whitespace/giant documents
-    "text_token_stats",
-    "text_quality",
-    "dedup_minhash_lsh",
-    "text_langid",
-]
-
-
-@pytest.fixture(scope="module")
-def extreme_sf_dir(sf_dir, tmp_path_factory) -> str:
-    dst = tmp_path_factory.mktemp("testdata_extreme")
-    return _extreme_audit.build_extreme_dir(sf_dir, str(dst))
-
-
-@pytest.fixture(scope="module")
-def extreme_oracle_con(extreme_sf_dir):
-    con = duckdb_connection(extreme_sf_dir)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", EXTREME_AUDITED)
-def test_extreme_values_parity(name, spark, extreme_sf_dir, extreme_oracle_con):
-    qd = load_all()[name]
-    result = compare(
-        name, qd.spark(spark, extreme_sf_dir), extreme_oracle_con, qd.oracle
-    )
-    assert result.ok, str(result)
-
-
-@pytest.mark.parametrize("name", sorted(_extreme_audit.BOTH_RAISE))
-def test_extreme_values_domain_bound_raises_on_both_engines(
-    name, spark, extreme_sf_dir, extreme_oracle_con
-):
-    """The |value| < 1e12 exact-arithmetic domain bound must fail
-    CLOSED and identically: a lossy engine-specific fallback (NULL or
-    truncation on one side only) would be a silent parity split."""
-    qd = load_all()[name]
-    with pytest.raises(Exception):
-        qd.spark(spark, extreme_sf_dir).collect()
-    with pytest.raises(Exception):
-        extreme_oracle_con.execute(qd.oracle).fetchall()
-
-
-# --------------------------------------------------------------------------
-# whitespace-class audit (round 10): U+000B vertical tab is the one
-# BMP codepoint Java regex \s contains and RE2's does not
-# (tests/test_ws_sweep.py proves exactness) — without the _WS_SRC
-# pre-translate every token count, shingle, fingerprint, and langid
-# call over VT-bearing text diverges.  Pin the tokenize surface over
-# the VT-injected corpus.
-_ws_spec = _ilu.spec_from_file_location(
-    "ws_audit",
-    _Path(__file__).resolve().parent.parent / "scripts" / "ws_audit.py",
-)
-_ws_audit = _ilu.module_from_spec(_ws_spec)
-_ws_spec.loader.exec_module(_ws_audit)
-
-WS_AUDITED = [
-    "text_token_stats",
-    "text_langid",
-    "text_fingerprint",
-    "text_bpe_tokens",
-    "text_tokenizer_fertility",
-    "dedup_minhash_lsh",
-    "pack_context_windows",
-    "text_unigram_logprob",
-]
-
-
-@pytest.fixture(scope="module")
-def ws_sf_dir(sf_dir, tmp_path_factory) -> str:
-    dst = tmp_path_factory.mktemp("testdata_ws")
-    return _ws_audit.build_ws_dir(sf_dir, str(dst))
-
-
-@pytest.fixture(scope="module")
-def ws_oracle_con(ws_sf_dir):
-    con = duckdb_connection(ws_sf_dir)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", WS_AUDITED)
-def test_vertical_tab_injected_parity(name, spark, ws_sf_dir, ws_oracle_con):
-    qd = load_all()[name]
-    result = compare(name, qd.spark(spark, ws_sf_dir), ws_oracle_con, qd.oracle)
-    assert result.ok, str(result)
-
-
-# --------------------------------------------------------------------------
-# zero-row audit (round 10): every table empty with schema preserved
-# — the new-partition-before-first-ingest state.  Pin the 17 keys the
-# audit fixed: ANSI /0 on count denominators, degenerate-structure
-# crashes (empty Holt panel, zero-cell Gram, NULL stream cutoff),
-# schema-less read-backs of zero-partition writes, first()-over-empty
-# vs the count CTE, and the ROLLUP/CUBE grand-total row Spark's
-# Expand drops on empty input (restored via the unioned global
-# aggregate).
-_empty_spec = _ilu.spec_from_file_location(
-    "empty_audit",
-    _Path(__file__).resolve().parent.parent / "scripts" / "empty_audit.py",
-)
-_empty_audit = _ilu.module_from_spec(_empty_spec)
-_empty_spec.loader.exec_module(_empty_audit)
-
-EMPTY_AUDITED = [
-    "sketch_kmv_distinct",
-    "dedup_lsh_recall_eval",
-    "orders_forecast_holt",
-    "stats_theil_sen_slope",
-    "emb_pca_project",
-    "emb_whitening_check",
-    "fs_write_parquet",
-    "fs_partitioned_prune",
-    "fs_compact_small_files",
-    "fs_parquet_codecs",
-    "rollup_sales",
-    "cube_sales",
-    "grouping_sets_sales",
-    "grouping_id_sales",
-    "streaming_left_outer_join",
-    "streaming_session_timeout",
-    "streaming_partitioned_sink",
-]
-
-
-@pytest.fixture(scope="module")
-def empty_sf_dir(sf_dir, tmp_path_factory) -> str:
-    dst = tmp_path_factory.mktemp("testdata_empty")
-    return _empty_audit.build_empty_dir(sf_dir, str(dst))
-
-
-@pytest.fixture(scope="module")
-def empty_oracle_con(empty_sf_dir):
-    con = duckdb_connection(empty_sf_dir)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", EMPTY_AUDITED)
-def test_zero_row_parity(name, spark, empty_sf_dir, empty_oracle_con):
-    qd = load_all()[name]
-    result = compare(
-        name, qd.spark(spark, empty_sf_dir), empty_oracle_con, qd.oracle
-    )
-    assert result.ok, str(result)
-
-
-# --------------------------------------------------------------------------
-# timestamp-extremes audit (round 10): 2% of events.ts perturbed to
-# the ns-range edges (1677/2262), negative epoch microseconds
-# (1969-12-31 23:59:59.999999), the 2000-02-29 leap day, and the
-# 2038 32-bit rollover instant.  Pins the time-arithmetic surface
-# (epoch-sign rounding in date_trunc/unix_micros, window bucketing,
-# asof ordering) over corrupted-parser timestamps.  The four
-# watermark state machines are excluded BY DESIGN — a future
-# timestamp poisons the watermark and the resulting drops are
-# arrival-order-defined (scripts/ts_extreme_audit.WATERMARK_POISONED).
-_tsx_spec = _ilu.spec_from_file_location(
-    "ts_extreme_audit",
-    _Path(__file__).resolve().parent.parent / "scripts" / "ts_extreme_audit.py",
-)
-_tsx_audit = _ilu.module_from_spec(_tsx_spec)
-_tsx_spec.loader.exec_module(_tsx_audit)
-
-TSX_AUDITED = [
-    "ev_tumbling_counts",
-    "ev_sessionize",
-    "ev_rolling_dau",
-    "ev_inter_event_times",
-    "ev_time_weighted_value",
-    "ev_gap_filled_daily",
-    "ev_cusum_changepoint",
-    "asof_purchase_last_view",
-    "time_decay_engagement",
-    "streaming_windowed_counts",
-]
-
-
-@pytest.fixture(scope="module")
-def tsx_sf_dir(sf_dir, tmp_path_factory) -> str:
-    dst = tmp_path_factory.mktemp("testdata_tsx")
-    return _tsx_audit.build_ts_extreme_dir(sf_dir, str(dst))
-
-
-@pytest.fixture(scope="module")
-def tsx_oracle_con(tsx_sf_dir):
-    con = duckdb_connection(tsx_sf_dir)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", TSX_AUDITED)
-def test_timestamp_extremes_parity(name, spark, tsx_sf_dir, tsx_oracle_con):
-    qd = load_all()[name]
-    result = compare(name, qd.spark(spark, tsx_sf_dir), tsx_oracle_con, qd.oracle)
-    assert result.ok, str(result)
-
-
-# --------------------------------------------------------------------------
-# constant-data audit (round 10): every measure column holds ONE value
-# (keys/text/timestamps stay real) — the zero-variance / all-ties
-# degenerate.  Pin the 5 keys the audit fixed: Spark's ANSI builtin
-# corr raising DIVIDE_BY_ZERO where DuckDB NULLs (stats_moments, now
-# the regr co-moment composition with mirrored nullif), unguarded
-# zero-variance z-score and tie-correction denominators
-# (sim_norm_outliers, stats_kruskal_wallis), the PCA captured-variance
-# bound flipping on round(pc,6) quantization at cap/tot == 1
-# (emb_pca_project), and the whitening identity on a rank-deficient
-# corpus (emb_whitening_check, now Λ⁺ pseudo-inverse whitening with
-# the expected matrix diag(1 retained, 0 dropped)).
-_const_spec = _ilu.spec_from_file_location(
-    "const_audit",
-    _Path(__file__).resolve().parent.parent / "scripts" / "const_audit.py",
-)
-_const_audit = _ilu.module_from_spec(_const_spec)
-_const_spec.loader.exec_module(_const_audit)
-
-CONST_AUDITED = [
-    "stats_moments",
-    "sim_norm_outliers",
-    "stats_kruskal_wallis",
-    "emb_pca_project",
-    "emb_whitening_check",
-]
-
-
-@pytest.fixture(scope="module")
-def const_sf_dir(sf_dir, tmp_path_factory) -> str:
-    dst = tmp_path_factory.mktemp("testdata_const")
-    return _const_audit.build_const_dir(sf_dir, str(dst))
-
-
-@pytest.fixture(scope="module")
-def const_oracle_con(const_sf_dir):
-    con = duckdb_connection(const_sf_dir)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", CONST_AUDITED)
-def test_constant_data_parity(name, spark, const_sf_dir, const_oracle_con):
-    qd = load_all()[name]
-    result = compare(name, qd.spark(spark, const_sf_dir), const_oracle_con, qd.oracle)
-    assert result.ok, str(result)
-
-
-# --------------------------------------------------------------------------
-# single-row audit (round 10): every table exactly ONE referentially
-# consistent row — the sharpest populated degenerate, between the
-# 30-row tiny-data audit (r9) and the zero-row audit (r10).  Pin the
-# 9 keys the audit fixed, all Spark ANSI DIVIDE_BY_ZERO where DuckDB
-# NULLs: n=1 zeroing tie corrections (mann_whitney), sample-variance
-# and OLS denominators (theil_sen, emb_dim_variance), between/within
-# dof (anova, brown_forsythe: k=1, n=k), one-sample-empty contrasts
-# (ks_test n_b=0, proportions_ztest empty arm), 1x1 contingency
-# (cramers_v), plus the bootstrap's zero-weight replicate NULL means
-# whose rank placement needed NULLS FIRST pinned in the oracle.
-_onerow_spec = _ilu.spec_from_file_location(
-    "onerow_audit",
-    _Path(__file__).resolve().parent.parent / "scripts" / "onerow_audit.py",
-)
-_onerow_audit = _ilu.module_from_spec(_onerow_spec)
-_onerow_spec.loader.exec_module(_onerow_audit)
-
-ONEROW_AUDITED = [
-    "stats_mann_whitney",
-    "stats_ks_test",
-    "stats_bootstrap_ci",
-    "stats_theil_sen_slope",
-    "stats_anova_oneway",
-    "stats_proportions_ztest",
-    "stats_brown_forsythe",
-    "stats_cramers_v",
-    "emb_dim_variance",
-]
-
-
-@pytest.fixture(scope="module")
-def onerow_sf_dir(sf_dir, tmp_path_factory) -> str:
-    dst = tmp_path_factory.mktemp("testdata_onerow")
-    return _onerow_audit.build_onerow_dir(sf_dir, str(dst))
-
-
-@pytest.fixture(scope="module")
-def onerow_oracle_con(onerow_sf_dir):
-    con = duckdb_connection(onerow_sf_dir)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", ONEROW_AUDITED)
-def test_single_row_parity(name, spark, onerow_sf_dir, onerow_oracle_con):
-    qd = load_all()[name]
-    result = compare(
-        name, qd.spark(spark, onerow_sf_dir), onerow_oracle_con, qd.oracle
-    )
-    assert result.ok, str(result)
-
-
-# --------------------------------------------------------------------------
-# all-NULL-measures audit (round 10): every measure column 100% NULL
-# (envelope flows, payload extractor broke) — the saturation limit of
-# the 2%-density NULL-injection audit.  Pin the 15 keys it fixed:
-# DuckDB's list_prepend seed surviving a NULL array fold to 0.0 where
-# Spark NULL-propagates (dot_sql CASE guard + the inline folds in
-# sim_norm_outliers / sql_higher_order_funcs), NULL embeddings kept
-# by generate_series theta-joins but dropped by posexplode (symmetric
-# IS NOT NULL exclusion: kmeans, cohesion, separation, dim_variance,
-# _gram_eigh → pca/whitening), the GK rank bound counting NULL rows
-# in its population (count(*) → count(col)), a NULL-gram smuggled
-# through greatest(NULL, 1) (text_ngram_freq), NULL-revenue months
-# entering the Holt series, schema_of_variant(NULL) vs the constant,
-# pandas .sum() = 0.0 over all-NaN in the stateful totals operator,
-# and the CDC rollup's coalesce defeating sum-of-union NULL
-# semantics.
-_allnull_spec = _ilu.spec_from_file_location(
-    "allnull_audit",
-    _Path(__file__).resolve().parent.parent / "scripts" / "allnull_audit.py",
-)
-_allnull_audit = _ilu.module_from_spec(_allnull_spec)
-_allnull_spec.loader.exec_module(_allnull_audit)
-
-ALLNULL_AUDITED = [
-    "emb_kmeans_update",
-    "emb_pca_project",
-    "emb_whitening_check",
-    "emb_label_centroid_cohesion",
-    "emb_centroid_separation",
-    "emb_dim_variance",
-    "sim_embedding_norms",
-    "sim_norm_outliers",
-    "sql_higher_order_funcs",
-    "sql_variant_type",
-    "sketch_quantiles_approx",
-    "text_ngram_freq",
-    "orders_forecast_holt",
-    "streaming_user_totals",
-    "cdc_incremental_agg",
-]
-
-
-@pytest.fixture(scope="module")
-def allnull_sf_dir(sf_dir, tmp_path_factory) -> str:
-    dst = tmp_path_factory.mktemp("testdata_allnull")
-    return _allnull_audit.build_allnull_dir(sf_dir, str(dst))
-
-
-@pytest.fixture(scope="module")
-def allnull_oracle_con(allnull_sf_dir):
-    con = duckdb_connection(allnull_sf_dir)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", ALLNULL_AUDITED)
-def test_all_null_parity(name, spark, allnull_sf_dir, allnull_oracle_con):
-    qd = load_all()[name]
-    result = compare(
-        name, qd.spark(spark, allnull_sf_dir), allnull_oracle_con, qd.oracle
-    )
-    assert result.ok, str(result)
-
-
-# --------------------------------------------------------------------------
-# duplicated-rows audit (round 10): every table unioned with a 10%
-# md5-gated sample of itself — exact full-row replays, the state an
-# at-least-once ingest leaves behind.  Pin the 6 keys the audit fixed
-# (well-defined relational semantics where the Spark lowering was not
-# multiplicity-equivalent to the oracle): q18's single-scan plan
-# skipping the output-grain re-group, LATERAL's per-driving-ROW
-# multiplicity deduped by a left_semi, the CDC incremental delta
-# assuming each key once per batch, the keyed streaming MERGE vs a
-# row-grain oracle, the streaming dedup's kept-counts grain, and the
-# perplexity panel's lang join fanning the doc grain back out.  The
-# key-identity operator class (scripts/dup_audit.KEY_GRAIN) is
-# audited under the documented replay-dedupe-at-ingest rule instead.
-_dup_spec = _ilu.spec_from_file_location(
-    "dup_audit",
-    _Path(__file__).resolve().parent.parent / "scripts" / "dup_audit.py",
-)
-_dup_audit = _ilu.module_from_spec(_dup_spec)
-_dup_spec.loader.exec_module(_dup_audit)
-
-DUP_AUDITED = [
-    "q18_large_volume_cust",
-    "sql_lateral_join",
-    "cdc_incremental_agg",
-    "streaming_cdc_apply",
-    "streaming_late_event_drops",
-    "corpus_perplexity_buckets",
-]
-
-
-@pytest.fixture(scope="module")
-def dup_sf_dir(sf_dir, tmp_path_factory) -> str:
-    dst = tmp_path_factory.mktemp("testdata_dup")
-    return _dup_audit.build_dup_dir(sf_dir, str(dst))
-
-
-@pytest.fixture(scope="module")
-def dup_oracle_con(dup_sf_dir):
-    con = duckdb_connection(dup_sf_dir)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", DUP_AUDITED)
-def test_duplicated_rows_parity(name, spark, dup_sf_dir, dup_oracle_con):
-    qd = load_all()[name]
-    result = compare(name, qd.spark(spark, dup_sf_dir), dup_oracle_con, qd.oracle)
-    assert result.ok, str(result)
-
-
-def test_dup_key_grain_class_is_current():
-    """Every KEY_GRAIN exclusion must name a real registry key — a
-    renamed operator would silently drop its audit coverage."""
-    reg = set(load_all())
-    missing = _dup_audit.KEY_GRAIN - reg
-    assert missing == set(), f"KEY_GRAIN names unknown keys: {missing}"
-
-
-# --------------------------------------------------------------------------
-# negative-measures audit (round 10): md5-gated 5% of money/measure
-# values sign-flipped (refunds / chargebacks / correction entries) —
-# SIGN stress where extreme-values stressed magnitude.  Pin the 2
-# keys the audit fixed: DuckDB RAISES on sqrt(negative) where Spark
-# yields NaN (out-of-domain inputs now NULL identically on both
-# engines), and Benford's first-digit cast crashing on the '-' sign
-# (now the first SIGNIFICANT digit: abs + zero-filter, mirrored).
-_neg_spec = _ilu.spec_from_file_location(
-    "negative_audit",
-    _Path(__file__).resolve().parent.parent / "scripts" / "negative_audit.py",
-)
-_neg_audit = _ilu.module_from_spec(_neg_spec)
-_neg_spec.loader.exec_module(_neg_audit)
-
-NEGATIVE_AUDITED = ["sql_math_funcs", "dq_benford_digits"]
-
-
-@pytest.fixture(scope="module")
-def negative_sf_dir(sf_dir, tmp_path_factory) -> str:
-    dst = tmp_path_factory.mktemp("testdata_negative")
-    return _neg_audit.build_negative_dir(sf_dir, str(dst))
-
-
-@pytest.fixture(scope="module")
-def negative_oracle_con(negative_sf_dir):
-    con = duckdb_connection(negative_sf_dir)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", NEGATIVE_AUDITED)
-def test_negative_measures_parity(name, spark, negative_sf_dir, negative_oracle_con):
-    qd = load_all()[name]
-    result = compare(
-        name, qd.spark(spark, negative_sf_dir), negative_oracle_con, qd.oracle
-    )
-    assert result.ok, str(result)
-
-
-# --------------------------------------------------------------------------
-# ragged-embeddings audit (round 10): 2% of vectors truncated to 32
-# of 64 dims (crashed writer / mid-migration re-embedding).  No code
-# changed: the 21 ragged-tolerant keys ride dot_sql's existing ragged
-# NULL contract on the raw copy, and the 15 FIXED-DIM operators
-# (PQ/ADC subspaces, per-dim panels, eigenbases, IVF codebooks) are
-# swept under the documented dimension-enforcement ingest rule
-# (filter len(embedding) = 64 — a genuinely reduced corpus, not the
-# clean data).  Pin three representatives of each protocol plus the
-# FIXED_DIM list's currency.
-_ragged_spec = _ilu.spec_from_file_location(
-    "ragged_audit",
-    _Path(__file__).resolve().parent.parent / "scripts" / "ragged_audit.py",
-)
-_ragged_audit = _ilu.module_from_spec(_ragged_spec)
-_ragged_spec.loader.exec_module(_ragged_audit)
-
-RAGGED_RAW = ["sim_bruteforce_topk", "sim_embedding_norms", "emb_jl_project"]
-RAGGED_DIM_ENFORCED = ["sim_ivf_pq_topk", "emb_dim_variance", "emb_whitening_check"]
-
-
-@pytest.fixture(scope="module")
-def ragged_sf_dir(sf_dir, tmp_path_factory) -> str:
-    dst = tmp_path_factory.mktemp("testdata_ragged")
-    return _ragged_audit.build_ragged_dir(sf_dir, str(dst))
-
-
-@pytest.fixture(scope="module")
-def ragged_dimok_dir(ragged_sf_dir, tmp_path_factory) -> str:
-    dst = tmp_path_factory.mktemp("testdata_ragged_dimok")
-    return _ragged_audit.build_dim_enforced_dir(ragged_sf_dir, str(dst))
-
-
-@pytest.mark.parametrize("name", RAGGED_RAW)
-def test_ragged_raw_parity(name, spark, ragged_sf_dir):
-    con = duckdb_connection(ragged_sf_dir)
-    try:
-        qd = load_all()[name]
-        result = compare(name, qd.spark(spark, ragged_sf_dir), con, qd.oracle)
-        assert result.ok, str(result)
-    finally:
-        con.close()
-
-
-@pytest.mark.parametrize("name", RAGGED_DIM_ENFORCED)
-def test_ragged_dim_enforced_parity(name, spark, ragged_dimok_dir):
-    con = duckdb_connection(ragged_dimok_dir)
-    try:
-        qd = load_all()[name]
-        result = compare(name, qd.spark(spark, ragged_dimok_dir), con, qd.oracle)
-        assert result.ok, str(result)
-    finally:
-        con.close()
-
-
-def test_ragged_fixed_dim_class_is_current():
-    reg = set(load_all())
-    missing = _ragged_audit.FIXED_DIM - reg
-    assert missing == set(), f"FIXED_DIM names unknown keys: {missing}"
-
-
-# --------------------------------------------------------------------------
-# date-extremes audit (round 10): the TPC-H DATE-column sibling of the
-# events.ts audit — 2% of o_orderdate/l_shipdate at the calendar
-# edges (ns-range boundaries with derivation headroom, negative-epoch
-# last microsecond, 2000-02-29, the 2038 rollover).  PASSED CLEAN
-# (327/327, zero fixes); pin the heaviest calendar-arithmetic keys so
-# a future regression in month-panel / trunc / interval paths at the
-# edges fails loudly.
-_datex_spec = _ilu.spec_from_file_location(
-    "date_extreme_audit",
-    _Path(__file__).resolve().parent.parent / "scripts" / "date_extreme_audit.py",
-)
-_datex_audit = _ilu.module_from_spec(_datex_spec)
-_datex_spec.loader.exec_module(_datex_audit)
-
-DATEX_PINNED = [
-    "sql_date_funcs",
-    "orders_monthly_growth",
-    "orders_seasonality_index",
-    "orders_cohort_revenue",
-    "stats_theil_sen_slope",
-    "q4_order_priority",
-]
-
-
-@pytest.fixture(scope="module")
-def datex_sf_dir(sf_dir, tmp_path_factory) -> str:
-    dst = tmp_path_factory.mktemp("testdata_datex")
-    return _datex_audit.build_date_extreme_dir(sf_dir, str(dst))
-
-
-@pytest.fixture(scope="module")
-def datex_oracle_con(datex_sf_dir):
-    con = duckdb_connection(datex_sf_dir)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", DATEX_PINNED)
-def test_date_extremes_parity(name, spark, datex_sf_dir, datex_oracle_con):
-    qd = load_all()[name]
-    result = compare(name, qd.spark(spark, datex_sf_dir), datex_oracle_con, qd.oracle)
-    assert result.ok, str(result)
-
-
-# --------------------------------------------------------------------------
-# malformed-JSON audit (round 10): 2% of events.props replaced with
-# truncated / non-JSON / empty / type-confused / shape-drifted
-# payloads.  Pin the 4 fixed keys: DuckDB's json_extract RAISES on
-# malformed input where Spark's get_json_object NULLs (json_valid
-# guards), CAST-of-extraction raising on type confusion on both
-# engines (TRY_CAST / try_cast), and the variant surface quarantining
-# instead of aborting (try_parse_json + try_variant_get, schema
-# introspection asserted on the well-formed shape only).
-_json_spec = _ilu.spec_from_file_location(
-    "json_audit",
-    _Path(__file__).resolve().parent.parent / "scripts" / "json_audit.py",
-)
-_json_audit = _ilu.module_from_spec(_json_spec)
-_json_spec.loader.exec_module(_json_audit)
-
-JSON_AUDITED = [
-    "sql_try_cast",
-    "sql_json_funcs",
-    "sql_variant_type",
-    "ev_json_props",
-]
-
-
-@pytest.fixture(scope="module")
-def json_sf_dir(sf_dir, tmp_path_factory) -> str:
-    dst = tmp_path_factory.mktemp("testdata_json")
-    return _json_audit.build_json_dir(sf_dir, str(dst))
-
-
-@pytest.fixture(scope="module")
-def json_oracle_con(json_sf_dir):
-    con = duckdb_connection(json_sf_dir)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", JSON_AUDITED)
-def test_malformed_json_parity(name, spark, json_sf_dir, json_oracle_con):
-    qd = load_all()[name]
-    result = compare(name, qd.spark(spark, json_sf_dir), json_oracle_con, qd.oracle)
-    assert result.ok, str(result)
-
-
-# --------------------------------------------------------------------------
-# NaN/Inf audit (round 11, verdict task #5): the extreme-values
-# audit's deliberate exclusion, promoted to an ingest rule —
-# FINITE_MEASURES: non-finite scalars are NULLed at ingest (the NULL
-# lane the round-9 audit proved), vectors with any non-finite
-# component are quarantined.  Spark and DuckDB handle non-finite
-# doubles under different ENGINE CONTRACTS (Spark canonical-NaN
-# groups/sorts largest and DECIMAL-casts to NULL; DuckDB raises on
-# the cast) — no operator-level formulation reconciles them, exactly
-# the KEY_GRAIN / FIXED_DIM class.  The pinned keys are
-# measure-heavy shapes over the perturbed columns; the full-registry
-# sweep is scripts/naninf_audit.py (green at round-11 close).
-_nf_spec = _ilu.spec_from_file_location(
-    "naninf_audit",
-    _Path(__file__).resolve().parent.parent / "scripts" / "naninf_audit.py",
-)
-_nf_audit = _ilu.module_from_spec(_nf_spec)
-_nf_spec.loader.exec_module(_nf_audit)
-
-NANINF_PINNED = [
-    "q1_pricing_summary",       # lineitem measure sums (DECIMAL folds)
-    "ev_value_histogram",       # value bucketing (NaN bucket = crash raw)
-    "stats_quantiles",          # exact quantiles over value
-    "stats_moments",            # co-moment machinery over measures
-    "sim_norm_outliers",        # embedding L2 norms (vector quarantine)
-    "dedup_embedding_cos",      # inner products (vector quarantine)
-    "emb_dim_variance",         # per-dimension panels
-    "orders_rfm_scores",        # o_totalprice monetary folds
-    "dq_iqr_outliers",          # robust spread over measures
-    "ev_anomaly_zscore",        # mean/std over value
-]
-
-
-@pytest.fixture(scope="module")
-def naninf_sf_dir(sf_dir, tmp_path_factory) -> str:
-    raw = tmp_path_factory.mktemp("testdata_nf_raw")
-    fin = tmp_path_factory.mktemp("testdata_nf_fin")
-    _nf_audit.build_naninf_dir(sf_dir, str(raw))
-    return _nf_audit.build_finite_dir(str(raw), str(fin))
-
-
-@pytest.fixture(scope="module")
-def naninf_oracle_con(naninf_sf_dir):
-    con = duckdb_connection(naninf_sf_dir)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", NANINF_PINNED)
-def test_naninf_finite_measures_parity(
-    name, spark, naninf_sf_dir, naninf_oracle_con
-):
-    qd = load_all()[name]
-    result = compare(
-        name, qd.spark(spark, naninf_sf_dir), naninf_oracle_con, qd.oracle
-    )
-    assert result.ok, str(result)
-
-
-def test_naninf_rule_lists_are_current():
-    """Audit column map stays truthful: every MEASURES column exists
-    with DOUBLE type in the real testdata schema."""
-    import duckdb as _dd
-
-    con = _dd.connect()
-    for t, (_key, cols) in _nf_audit.MEASURES.items():
-        desc = dict(
-            (c, ty)
-            for c, ty, *_ in con.execute(
-                f"DESCRIBE SELECT * FROM '/root/testdata/sf0.001/{t}.parquet'"
-            ).fetchall()
-        )
-        for c in cols:
-            assert desc.get(c) == "DOUBLE", (t, c, desc.get(c))
-    con.close()
-
-
-# --------------------------------------------------------------------------
-# row-order / layout-invariance audit (round 11): every table
-# rewritten in a deterministic md5 scramble of its row order — the
-# one degree of freedom a distributed storage layer exercises
-# constantly (task-commit order, compaction, row-group interleave).
-# Contract: NOTHING in any result depends on layout — approximate
-# sketches emit bound-booleans, range-bucket bounds only steer
-# balance, double folds round before decimal accumulation.  The pins
-# run BOTH checks (cross-engine parity on the scrambled copy, and
-# spark(scrambled) == spark(original) invariance) on the shapes most
-# exposed to layout: sketch merges, range-bucketed cumsums, top-k,
-# and first/last windows.  Full registry: scripts/roworder_audit.py.
-_ro_spec = _ilu.spec_from_file_location(
-    "roworder_audit",
-    _Path(__file__).resolve().parent.parent / "scripts" / "roworder_audit.py",
-)
-_ro_audit = _ilu.module_from_spec(_ro_spec)
-_ro_spec.loader.exec_module(_ro_audit)
-
-ROWORDER_PINNED = [
-    "sketch_quantiles_approx",  # GK merge tree follows layout; bound must not
-    "sketch_hll_distinct",      # HLL merge order
-    "distinct_users_approx",    # HLL++ bound boolean
-    "corpus_token_budget",      # grouped_cumsum range-bucket bounds
-    "orders_rfm_scores",        # distributed_ntile bucketing
-    "win_topk_per_group",       # WindowGroupLimit heap order
-    "win_first_last",           # first/last REQUIRE explicit ordering
-    "stats_spearman_corr",      # the full two-phase cumsum machinery
-    "dedup_minhash_lsh",        # banded pipeline over scrambled docs
-    "ev_sessionize",            # lag/cumsum over scrambled arrival
-]
-
-
-@pytest.fixture(scope="module")
-def roworder_sf_dir(sf_dir, tmp_path_factory) -> str:
-    dst = tmp_path_factory.mktemp("testdata_roworder")
-    return _ro_audit.build_scrambled_dir(sf_dir, str(dst))
-
-
-@pytest.fixture(scope="module")
-def roworder_oracle_con(roworder_sf_dir):
-    con = duckdb_connection(roworder_sf_dir)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", ROWORDER_PINNED)
-def test_roworder_parity(name, spark, roworder_sf_dir, roworder_oracle_con):
-    qd = load_all()[name]
-    result = compare(
-        name, qd.spark(spark, roworder_sf_dir), roworder_oracle_con, qd.oracle
-    )
-    assert result.ok, str(result)
-
-
-@pytest.mark.parametrize("name", ROWORDER_PINNED)
-def test_roworder_invariance(name, spark, roworder_sf_dir, sf_dir):
-    qd = load_all()[name]
-    result = _ro_audit.invariance_check(name, qd, spark, roworder_sf_dir, sf_dir)
-    assert result.ok, str(result)
-
-
-# --------------------------------------------------------------------------
-# file-split layout audit (round 11): the second layout degree of
-# freedom after row order — every table rewritten as a 4-part
-# directory with rows md5-assigned to parts (what every distributed
-# writer / compaction tier produces; at 100 TB no table is one
-# file).  Parity runs against glob views (DuckDB does not auto-glob
-# a directory); invariance pins spark(split) == spark(original).
-# LAYOUT_DEFINED keys (fs_ls/fs_glob/fs_read_binary/... — the file
-# layout IS their contract) are excluded by documented design.
-_fsplit_spec = _ilu.spec_from_file_location(
-    "filesplit_audit",
-    _Path(__file__).resolve().parent.parent / "scripts" / "filesplit_audit.py",
-)
-_fsplit_audit = _ilu.module_from_spec(_fsplit_spec)
-_fsplit_spec.loader.exec_module(_fsplit_audit)
-
-FILESPLIT_PINNED = [
-    "fs_read_parquet",          # the multi-file read path itself
-    "fs_sql_path",              # direct-path SQL over a directory
-    "fs_read_schema_merge",     # schema merge across parts
-    "q1_pricing_summary",       # scan+agg over 4-way split fact
-    "dedup_minhash_lsh",        # banded pipeline over split docs
-    "sketch_quantiles_approx",  # GK merge across file partitions
-    "corpus_token_budget",      # range-bucket cumsum over split corpus
-    "streaming_windowed_counts",  # file-source stream from split input
-]
-
-
-def test_filesplit_layout_defined_keys_exist():
-    from duckdb_hdfs_spark.queries import load_all
-
-    reg = load_all()
-    missing = _fsplit_audit.LAYOUT_DEFINED - set(reg)
-    assert not missing, f"LAYOUT_DEFINED names not in registry: {missing}"
-
-
-@pytest.fixture(scope="module")
-def filesplit_sf_dir(sf_dir, tmp_path_factory) -> str:
-    dst = tmp_path_factory.mktemp("testdata_filesplit")
-    return _fsplit_audit.build_split_dir(sf_dir, str(dst))
-
-
-@pytest.fixture(scope="module")
-def filesplit_oracle_con(filesplit_sf_dir):
-    con = _fsplit_audit.glob_connection(filesplit_sf_dir)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", FILESPLIT_PINNED)
-def test_filesplit_parity(name, spark, filesplit_sf_dir, filesplit_oracle_con):
-    qd = load_all()[name]
-    result = compare(
-        name, qd.spark(spark, filesplit_sf_dir), filesplit_oracle_con, qd.oracle
-    )
-    assert result.ok, str(result)
-
-
-@pytest.mark.parametrize("name", FILESPLIT_PINNED)
-def test_filesplit_invariance(name, spark, filesplit_sf_dir, sf_dir):
-    qd = load_all()[name]
-    result = _ro_audit.invariance_check(name, qd, spark, filesplit_sf_dir, sf_dir)
-    assert result.ok, str(result)
-
-
-# --------------------------------------------------------------------------
-# schema-widening audit (round 11): every table gains an unexpected
-# trailing column (_schema_drift) — a producer rollout mid-migration,
-# the most common schema-evolution event a 100 TB lake sees.  Caught
-# ONE real finding: fs_read_schema_merge wrote the SOURCE's full
-# schema into its generation files, leaking the drift column into its
-# merged output (fixed: named projection — the generation delta must
-# be the one column THAT writer adds, whatever the source grew).
-# WHOLE_SCHEMA keys (select-*/whole-file surfaces) are invariance-
-# exempt by documented design; parity holds for the full registry.
-_drift_spec = _ilu.spec_from_file_location(
-    "schemadrift_audit",
-    _Path(__file__).resolve().parent.parent / "scripts" / "schemadrift_audit.py",
-)
-_drift_audit = _ilu.module_from_spec(_drift_spec)
-_drift_spec.loader.exec_module(_drift_audit)
-
-DRIFT_PINNED = [
-    "fs_read_schema_merge",   # the round-11 finding, now drift-invariant
-    "q1_pricing_summary",
-    "ev_sessionize",
-    "dedup_minhash_lsh",
-    "text_tfidf_topk",
-    "cdc_merge_orders",
-]
-
-
-def test_drift_whole_schema_keys_exist():
-    from duckdb_hdfs_spark.queries import load_all
-
-    reg = load_all()
-    missing = _drift_audit.WHOLE_SCHEMA - set(reg)
-    assert not missing, f"WHOLE_SCHEMA names not in registry: {missing}"
-
-
-@pytest.fixture(scope="module")
-def drift_sf_dir(sf_dir, tmp_path_factory) -> str:
-    dst = tmp_path_factory.mktemp("testdata_drift")
-    return _drift_audit.build_widened_dir(sf_dir, str(dst))
-
-
-@pytest.fixture(scope="module")
-def drift_oracle_con(drift_sf_dir):
-    con = duckdb_connection(drift_sf_dir)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", DRIFT_PINNED)
-def test_schema_drift_parity(name, spark, drift_sf_dir, drift_oracle_con):
-    qd = load_all()[name]
-    result = compare(name, qd.spark(spark, drift_sf_dir), drift_oracle_con, qd.oracle)
-    assert result.ok, str(result)
-
-
-@pytest.mark.parametrize("name", DRIFT_PINNED)
-def test_schema_drift_invariance(name, spark, drift_sf_dir, sf_dir):
-    qd = load_all()[name]
-    result = _ro_audit.invariance_check(name, qd, spark, drift_sf_dir, sf_dir)
-    assert result.ok, str(result)
+def test_cli_rejects_unknown_names(capsys):
+    """A typo must fail loudly, never sweep nothing and exit 0."""
+    for argv, name in ((["empty", "no_such_key"], "no_such_key"), (["no_such_class"], "no_such_class")):
+        with pytest.raises(SystemExit) as exc:
+            audit.main(argv)
+        assert exc.value.code != 0
+        assert name in capsys.readouterr().err
+
+
+def test_cli_fails_a_sweep_that_checks_nothing(capsys):
+    # fs_ls is a real key, but the filesplit class skips it
+    assert audit.main(["filesplit", "fs_ls"]) == 1
+    assert "FAIL filesplit" in capsys.readouterr().out
+
+
+#: class -> keys red on a full-registry sweep at sf0.001, each a bound
+#: the README documents; every other class sweeps all green
+RECORDED_RED: dict[str, set[str]] = {}
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("cls", audit.CLASSES)
+def test_full_registry_sweep(cls, audit_check):
+    red = {
+        r.name
+        for key in audit.sweep_keys(cls, load_all())
+        for r in audit_check(cls, key)
+        if not r.ok
+    }
+    assert red == RECORDED_RED.get(cls, set())

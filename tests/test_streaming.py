@@ -563,29 +563,14 @@ def test_watermark_machines_oracle_green_on_poisoned_replay(spark, sf_dir, tmp_p
     stream-stream joins) stay oracle-green on the timestamp-extremes
     poisoned fixture (2% of events.ts forced to 1677/2262/1969-epoch-
     edge/leap-day/2038 parser-garbage instants).  Before round 12
-    these five were the audit's WATERMARK_POISONED exclusion class —
+    these five were excluded from the timestamp-extremes audit as
     arrival-order-defined under corruption; the replay-anchored
     ingest clamp (mirrored in each oracle via CLAMP_CTES) makes both
     engines compute the same deterministically clamped stream."""
-    import importlib.util
-    from pathlib import Path
-
-    audit_path = (
-        Path(__file__).resolve().parent.parent / "scripts" / "ts_extreme_audit.py"
-    )
-    spec = importlib.util.spec_from_file_location("ts_extreme_audit", audit_path)
-    audit = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(audit)
-    assert audit.WATERMARK_POISONED == set(), (
-        "the exclusion class must stay empty — the clamp is the fix"
-    )
-
-    dst = tmp_path / "tsx"
-    dst.mkdir()
-    audit.build_ts_extreme_dir(sf_dir, str(dst))
-
+    from duckdb_hdfs_spark import audit
     from duckdb_hdfs_spark.oracle import run_all
 
+    dst = audit.build("ts_extreme", sf_dir, str(tmp_path)).perturbed
     keys = [
         "streaming_session_windows",
         "streaming_view_purchase_join",
@@ -598,6 +583,6 @@ def test_watermark_machines_oracle_green_on_poisoned_replay(spark, sf_dir, tmp_p
         # −1 µs; both sides now lower through the pmod floor identity)
         "sql_epoch_calendar_funcs",
     ]
-    res = run_all(spark, str(dst), names=keys)
+    res = run_all(spark, dst, names=keys)
     bad = [str(r) for r in res if not r.ok]
     assert bad == [], bad
