@@ -36,9 +36,10 @@ Spark 4.1 + DuckDB, not assumed):
    malformed-JSON audit's quarantine discipline.  After quarantine
    both engines agree with the uncorrupted baseline.
 4. The quarantined lake is then swept through the FULL registry
-   parity check (glob views, LAYOUT_DEFINED keys excluded exactly as
-   in scripts/filesplit_audit.py) — proving the documented recovery
-   restores end-to-end correctness, not just rowcounts.
+   parity check (keys the file-split audit class skips excluded, as
+   in ``python -m duckdb_hdfs_spark.audit filesplit``) — proving the
+   documented recovery restores end-to-end correctness, not just
+   rowcounts.
 
 Round 13 (r12-verdict task #6) extends the corrupt-FILE contract to
 the other three source formats — all probe-measured on Spark 4.1 +
@@ -126,29 +127,24 @@ def _ignore_corrupt(spark):
         spark.conf.set("spark.sql.files.ignoreCorruptFiles", prev)
 
 
-def build_corrupt_lake(sf_dir: str, dst: str) -> None:
-    """Each table becomes ``{dst}/{t}.parquet/`` = the filesplit
-    audit's 4 clean md5-assigned parts PLUS three corrupt members:
+def build_corrupt_lake(sf_dir: str, dst: str) -> str:
+    """Write the corrupt lake under ``dst`` and return its path: each
+    table becomes ``{lake}/{t}.parquet/`` = the file-split audit
+    class's 4 clean md5-assigned parts PLUS three corrupt members:
     a truncated clone of part 0, a zero-byte .parquet, and a stray
     notes.txt."""
-    import importlib.util as ilu
+    from duckdb_hdfs_spark import audit
 
-    fs_spec = ilu.spec_from_file_location(
-        "filesplit_audit",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     "filesplit_audit.py"),
-    )
-    fs = ilu.module_from_spec(fs_spec)
-    fs_spec.loader.exec_module(fs)
-    fs.build_split_dir(sf_dir, dst)
+    lake = audit.build("filesplit", sf_dir, dst).perturbed
     for t in TABLES:
-        d = f"{dst}/{t}.parquet"
+        d = f"{lake}/{t}.parquet"
         clean0 = open(f"{d}/part-00000.parquet", "rb").read()
         with open(f"{d}/part-trunc.parquet", "wb") as f:
             f.write(clean0[:-TRUNCATE_TAIL])
         open(f"{d}/part-zero.parquet", "wb").close()
         with open(f"{d}/notes.txt", "w") as f:
             f.write("ops scratch note — not data\n")
+    return lake
 
 
 def quarantine(table_dir: str, dead_letter: str) -> list[str]:
@@ -447,8 +443,7 @@ def main() -> int:
         pin(exc is not None, f"duckdb single-file {name} raises ({exc})")
 
     # ---- 2. mixed directory: default fail-fast + poisoned inference ----
-    lake = tempfile.mkdtemp(prefix="testdata_corrupt_")
-    build_corrupt_lake(args.sf, lake)
+    lake = build_corrupt_lake(args.sf, tempfile.mkdtemp(prefix="testdata_corrupt_"))
     print(f"corrupt lake at {lake} (4 clean parts + 3 bad members/table)",
           flush=True)
     probe = f"{lake}/nation.parquet"
@@ -502,25 +497,17 @@ def main() -> int:
 
     # ---- 5. full-registry parity sweep over the quarantined lake ----
     if not args.skip_sweep:
-        import importlib.util as ilu
-
-        fs_spec = ilu.spec_from_file_location(
-            "filesplit_audit",
-            os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "filesplit_audit.py"),
-        )
-        fs = ilu.module_from_spec(fs_spec)
-        fs_spec.loader.exec_module(fs)
-
-        from duckdb_hdfs_spark.oracle import CompareResult, compare
+        from duckdb_hdfs_spark.audit import CLASSES
+        from duckdb_hdfs_spark.oracle import CompareResult, compare, duckdb_connection
         from duckdb_hdfs_spark.queries import load_all
 
         reg = load_all()
         keys = [k for k in (args.keys or list(reg)) if k in reg]
-        for name in sorted(fs.LAYOUT_DEFINED & set(keys)):
-            print(f"SKIP {name} (LAYOUT_DEFINED — see filesplit_audit)")
-        keys = [k for k in keys if k not in fs.LAYOUT_DEFINED]
-        con = fs.glob_connection(lake)
+        layout_defined = CLASSES["filesplit"].skip
+        for name in sorted(layout_defined & set(keys)):
+            print(f"SKIP {name} (the file layout IS the contract — see the filesplit audit class)")
+        keys = [k for k in keys if k not in layout_defined]
+        con = duckdb_connection(lake)
         bad_sweep, n = [], 0
         for name in keys:
             qd = reg[name]

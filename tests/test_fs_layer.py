@@ -403,6 +403,36 @@ def test_corrupt_file_contract(spark, sf_dir, tmp_path):
     assert spark.read.parquet(str(d)).count() == want
 
 
+def test_corrupt_lake_builds_and_quarantines(sf_dir, tmp_path):
+    """The corrupt audit's lake: every table a directory of the four
+    file-split parts plus three bad members; quarantine leaves the
+    parts, which the oracle connection reads back as the clean rows."""
+    import importlib.util
+    from pathlib import Path
+
+    from duckdb_hdfs_spark.oracle import duckdb_connection
+    from duckdb_hdfs_spark.sources.catalog import TABLES
+
+    audit_path = (
+        Path(__file__).resolve().parent.parent / "scripts" / "corrupt_audit.py"
+    )
+    spec = importlib.util.spec_from_file_location("corrupt_audit", audit_path)
+    audit = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(audit)
+
+    lake = audit.build_corrupt_lake(sf_dir, str(tmp_path))
+    parts = {f"part-{i:05d}.parquet" for i in range(4)}
+    bad = {"notes.txt", "part-trunc.parquet", "part-zero.parquet"}
+    for t in TABLES:
+        d = Path(lake) / f"{t}.parquet"
+        assert {p.name for p in d.iterdir()} == parts | bad
+        assert set(audit.quarantine(str(d), f"{lake}/_dead_letter")) == bad
+    clean, split = duckdb_connection(sf_dir), duckdb_connection(lake)
+    for t in TABLES:
+        q = f"SELECT count(*) FROM {t}"
+        assert split.execute(q).fetchone() == clean.execute(q).fetchone()
+
+
 # round 13: corrupt-file contracts for the non-parquet formats
 # (scripts/corrupt_audit.py §§5-8) pinned on one table for test speed.
 def test_corrupt_format_contracts(spark, sf_dir, tmp_path):
