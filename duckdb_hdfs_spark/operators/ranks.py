@@ -163,7 +163,6 @@ def range_frame_count_decsum(
     value_col: str,
     lo: float,
     hi: float,
-    id_col: str,
     dec_type: str = "decimal(28,6)",
     out_n: str = "__n",
     out_s: str = "__s",
@@ -207,10 +206,13 @@ def range_frame_count_decsum(
     decimal sum is the all-NULL sum, i.e. NULL) exactly as the naive
     window computes them.
 
-    ``id_col`` must be unique per row (the probe fold groups on it).
+    The probe fold groups on a row tag the operator assigns before the
+    explode (``monotonically_increasing_id``; grouped_cumsum
+    checkpoints the exploded frame, so every consumer sees the same
+    tag), so duplicated input rows stay separate rows.
     Scale shape: one explode (3× narrow rows), one grouped_cumsum
     (range-bucketed — parallelism independent of partition
-    cardinality), one id-keyed aggregation; work per row is O(1)
+    cardinality), one tag-keyed aggregation; work per row is O(1)
     versus the window's O(frame).  vs halo_range_frame: no replication
     factor, no bucket-width tuning, no epsilon nudges — but only for
     invertible aggregates over exact types (count / decimal sum);
@@ -245,8 +247,9 @@ def range_frame_count_decsum(
         )
 
     nonnull = F.when(dec.isNotNull(), F.lit(1)).otherwise(F.lit(0))
-    un = rv.select(
+    un = rv.withColumn("__rid", F.monotonically_increasing_id()).select(
         *part_cols,
+        "__rid",
         F.explode(
             F.array(
                 carrier(v, 1, 1, F.coalesce(dec, zero), nonnull),
@@ -256,6 +259,7 @@ def range_frame_count_decsum(
         ).alias("_e"),
     ).select(
         *part_cols,
+        "__rid",
         F.col("_e._sortv").alias("_sortv"),
         F.col("_e._tie").alias("_tie"),
         F.col("_e._c").alias("_c"),
@@ -279,7 +283,7 @@ def range_frame_count_decsum(
     lo_cd = F.max(F.when(F.col("_tie") == 0, F.col("_cd")))
     folded = (
         cum.filter(F.col("_tie") != 1)
-        .groupBy(F.col(f"_row.{id_col}").alias("__id"))
+        .groupBy("__rid")
         .agg(
             F.first("_row").alias("_row"),  # both probes carry the same row
             (hi_cc - lo_cc).alias(out_n),

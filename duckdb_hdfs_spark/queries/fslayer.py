@@ -4,8 +4,13 @@ scans, CSV/JSON reads, direct-path SQL, listings, write round-trips.
 
 No HDFS daemon exists in this container, so paths are ``file://``;
 every code path goes through the identical Hadoop FileSystem API that
-serves ``hdfs://`` (see sources/fs.py and conf.py for the connection
-layer the reference configures via hdfs_default_namenode etc.).
+serves ``hdfs://``: Spark's readers and writers (an overwrite write
+deletes its old output through that API), and
+:class:`~duckdb_hdfs_spark.sources.fs.HadoopFs` for listings, existence
+checks and deletes.  Written copies live under the per-process
+:func:`~duckdb_hdfs_spark.sources.fs.scratch` root (see sources/fs.py,
+and conf.py for the connection layer the reference configures via
+hdfs_default_namenode etc.).
 
 Oracle note: the driver's DuckDB connection registers table views at
 sf0.01, so path-independent oracles just select from the views —
@@ -14,10 +19,7 @@ the round-trip through glob/CSV/JSON must reproduce the same rows.
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,48 +27,7 @@ from pyspark.sql import functions as F
 from duckdb_hdfs_spark.operators.genutil import local_frame
 from duckdb_hdfs_spark.queries import query
 from duckdb_hdfs_spark.sources.catalog import load_table, table_path
-from duckdb_hdfs_spark.sources.fs import HadoopFs
-
-# Per-process scratch root: the fs round-trip keys rmtree-then-write
-# fixed-named subdirs, so two sessions sharing one literal path race
-# (one deletes mid-scan of the other — seen as a flaky plan test when
-# pytest overlaps an oracle sweep).  PID-suffixing gives each process
-# its own namespace; within a process the fixed names keep re-runs
-# idempotent, and the atexit hook keeps repeated runs from
-# accumulating per-PID table copies in the temp dir (round-8 review).
-_SCRATCH = os.path.join(
-    tempfile.gettempdir(), f"duckdb_hdfs_spark_scratch_{os.getpid()}"
-)
-
-
-def _prune_stale_scratch() -> None:
-    """Best-effort removal of sibling scratch dirs whose owning PID is
-    dead: the atexit hook only fires on graceful exit, so a SIGKILLed
-    or OOMed run leaks its dir — and with PID recycling those stale
-    copies would otherwise accumulate forever (round-8 advice)."""
-    prefix = "duckdb_hdfs_spark_scratch_"
-    try:
-        entries = os.listdir(tempfile.gettempdir())
-    except OSError:  # pragma: no cover - unreadable tmp
-        return
-    for name in entries:
-        if not name.startswith(prefix):
-            continue
-        pid_part = name[len(prefix):]
-        if not pid_part.isdigit() or int(pid_part) == os.getpid():
-            continue
-        try:
-            os.kill(int(pid_part), 0)  # signal 0: existence probe only
-        except ProcessLookupError:
-            shutil.rmtree(
-                os.path.join(tempfile.gettempdir(), name), ignore_errors=True
-            )
-        except OSError:  # pragma: no cover - alive but not ours (EPERM)
-            pass
-
-
-_prune_stale_scratch()
-atexit.register(shutil.rmtree, _SCRATCH, ignore_errors=True)
+from duckdb_hdfs_spark.sources.fs import HadoopFs, scratch
 
 
 # --------------------------------------------------------------------------
@@ -85,9 +46,9 @@ def fs_read_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def fs_read_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV write + schema-explicit read-back round trip."""
-    path = os.path.join(_SCRATCH, "nation_csv")
-    shutil.rmtree(path, ignore_errors=True)
-    load_table(spark, sf_dir, "nation").write.option("header", True).csv(path)
+    path = scratch("nation_csv")
+    nation = load_table(spark, sf_dir, "nation")
+    nation.write.mode("overwrite").option("header", True).csv(path)
     return spark.read.schema("n_nationkey int, n_name string, n_regionkey int").option(
         "header", True
     ).csv(path)
@@ -100,9 +61,8 @@ def fs_read_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def fs_read_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NDJSON write + read-back round trip."""
-    path = os.path.join(_SCRATCH, "region_json")
-    shutil.rmtree(path, ignore_errors=True)
-    load_table(spark, sf_dir, "region").write.json(path)
+    path = scratch("region_json")
+    load_table(spark, sf_dir, "region").write.mode("overwrite").json(path)
     return spark.read.schema("r_regionkey int, r_name string").json(path)
 
 
@@ -169,10 +129,9 @@ def fs_write_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     CreateDirectory + MoveFile on commit).  Round-trips orders
     partitioned by status, then re-aggregates from the written copy —
     proving the sink preserves content."""
-    path = os.path.join(_SCRATCH, "orders_parquet")
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch("orders_parquet")
     src = load_table(spark, sf_dir, "orders")
-    src.write.partitionBy("o_orderstatus").parquet(path)
+    src.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
     # explicit schema: an EMPTY source writes zero partition dirs and
     # schema inference would fail on the bare _SUCCESS marker — the
     # round-trip must return an empty frame, not raise (zero-row
@@ -234,11 +193,11 @@ def fs_read_csv_gzip(spark: SparkSession, sf_dir: str) -> DataFrame:
     splittable, so at scale one file = one task; real pipelines shard
     into many gz files (as this partitioned write does) or use a
     splittable codec for large inputs."""
-    path = os.path.join(_SCRATCH, "nation_csv_gz")
-    shutil.rmtree(path, ignore_errors=True)
-    load_table(spark, sf_dir, "nation").select(
+    path = scratch("nation_csv_gz")
+    nation = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
-    ).write.option("compression", "gzip").option("header", "true").csv(path)
+    )
+    nation.write.mode("overwrite").options(compression="gzip", header="true").csv(path)
     return spark.read.option("header", "true").schema(
         "n_nationkey int, n_name string, n_regionkey int"
     ).csv(path)
@@ -255,11 +214,10 @@ def fs_read_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     VFS is format-agnostic: DuckDB reads whatever bytes HDFS holds;
     Spark's native ORC source adds the same predicate-pushdown /
     column-pruning path parquet gets)."""
-    path = os.path.join(_SCRATCH, "nation_orc")
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch("nation_orc")
     load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
-    ).write.orc(path)
+    ).write.mode("overwrite").orc(path)
     return spark.read.orc(path)
 
 
@@ -283,8 +241,7 @@ def fs_read_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``union_by_name`` over an HDFS glob); Spark resolves the merged
     schema from the parquet footers only, so at 100 TB the schema
     merge is a footer-metadata operation, not a data scan."""
-    path = os.path.join(_SCRATCH, "nation_evolved")
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch("nation_evolved")
     # NAMED projection, not the source's full schema (round-11
     # schema-drift audit): writing nation.* leaked an upstream
     # producer's added column into both generations and the merged
@@ -294,10 +251,11 @@ def fs_read_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
-    nation.filter(F.col("n_nationkey") < 13).write.parquet(f"{path}/gen=1")
+    gen1 = nation.filter(F.col("n_nationkey") < 13)
+    gen1.write.mode("overwrite").parquet(f"{path}/gen=1")
     nation.filter(F.col("n_nationkey") >= 13).withColumn(
         "n_name_len", F.length("n_name").cast("int")
-    ).write.parquet(f"{path}/gen=2")
+    ).write.mode("overwrite").parquet(f"{path}/gen=2")
     return spark.read.option("mergeSchema", "true").parquet(
         f"{path}/gen=1", f"{path}/gen=2"
     )
@@ -321,10 +279,11 @@ def fs_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plan_shape.py).  At 100 TB this is the difference
     between scanning 1/5th of the lake and scanning all of it; the
     same layout serves the reference's hive-style HDFS datasets."""
-    path = os.path.join(_SCRATCH, "events_by_type", os.path.basename(sf_dir))
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch(f"events_by_type/{os.path.basename(sf_dir)}")
     src = load_table(spark, sf_dir, "events")
-    src.write.partitionBy("event_type").parquet(path)
+    # a static-mode overwrite of a partitioned write removes the whole
+    # path, so no partition of an earlier run survives
+    src.write.mode("overwrite").partitionBy("event_type").parquet(path)
     # explicit schema: survives the zero-partition empty write
     # (zero-row audit, round 10 — see fs_write_parquet)
     back = spark.read.schema(src.schema).parquet(path)
@@ -376,13 +335,13 @@ def fs_read_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     the driver runs there, and the local sweep reads the same files).
     A run against a data directory with a DIFFERENT table inventory
     fails loudly instead of silently comparing the wrong files."""
-    import glob as _glob
-
+    fs = HadoopFs(spark)
     bound = "/root/testdata/sf0.01"
-    want = sorted(os.path.basename(p) for p in _glob.glob(f"{bound}/*.parquet"))
-    got = sorted(
-        os.path.basename(p) for p in _glob.glob(f"{sf_dir.rstrip('/')}/*.parquet")
-    )
+
+    def inventory(d: str) -> list[str]:
+        return [os.path.basename(fi.path) for fi in fs.glob(f"{d}/*.parquet")]
+
+    want, got = inventory(bound), inventory(sf_dir.rstrip("/"))
     if want != got:
         raise ValueError(
             f"fs_read_binary is bound to {bound} (the oracle's read_blob "
@@ -429,10 +388,11 @@ def fs_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # drop-and-clean first: a FRESH session does not know the tables,
     # but their warehouse locations survive from earlier runs and
     # saveAsTable refuses to reuse an unmanaged leftover location
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    fs = HadoopFs(spark)
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").rstrip("/")
     for tbl in ("fsq_bucketed_orders", "fsq_bucketed_lineitem"):
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        shutil.rmtree(os.path.join(warehouse, tbl), ignore_errors=True)
+        fs.rm(f"{warehouse}/{tbl}", recursive=True)
     write_bucketed(
         load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus"
@@ -490,14 +450,14 @@ def fs_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges read splits; repartition would shuffle for balanced output
     at the cost of a pass) and per-partition output sizing follows
     spark.sql.files.maxPartitionBytes."""
-    small = os.path.join(_SCRATCH, "events_small")
-    compacted = os.path.join(_SCRATCH, "events_compacted")
-    shutil.rmtree(small, ignore_errors=True)
-    shutil.rmtree(compacted, ignore_errors=True)
-    load_table(spark, sf_dir, "events").repartition(64).write.parquet(small)
-    n_small = len([f for f in os.listdir(small) if f.endswith(".parquet")])
-    spark.read.parquet(small).coalesce(4).write.parquet(compacted)
-    n_comp = len([f for f in os.listdir(compacted) if f.endswith(".parquet")])
+    fs = HadoopFs(spark)
+    small = scratch("events_small")
+    compacted = scratch("events_compacted")
+    events = load_table(spark, sf_dir, "events")
+    events.repartition(64).write.mode("overwrite").parquet(small)
+    n_small = len(fs.glob(f"{small}/*.parquet"))
+    spark.read.parquet(small).coalesce(4).write.mode("overwrite").parquet(compacted)
+    n_comp = len(fs.glob(f"{compacted}/*.parquet"))
     return spark.read.parquet(compacted).agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.round(F.sum(F.col("value").cast("decimal(28,6)")), 4)
@@ -537,8 +497,7 @@ def fs_read_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the expected row/bad/total accounting straight from the table —
     the corrupted field must round-trip as NULL, never as a dropped
     or mangled row."""
-    path = os.path.join(_SCRATCH, "orders_malformed_csv")
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch("orders_malformed_csv")
     # rows with a NULL price are excluded from the synthesized feed on
     # BOTH engines: concat_ws would silently DROP the null field
     # (producing a short row the reader counts as malformed) while the
@@ -553,7 +512,7 @@ def fs_read_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("o_totalprice", 2).cast("decimal(18,2)").cast("string")
         ),
     )
-    ods.select(line.alias("value")).write.text(path)
+    ods.select(line.alias("value")).write.mode("overwrite").text(path)
     back = (
         spark.read.schema("o_orderkey LONG, price DOUBLE")
         .option("mode", "PERMISSIVE")
@@ -612,8 +571,7 @@ def fs_typed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     is added."""
     from duckdb_hdfs_spark.operators.rebalance import rebalance_cpu_heavy
 
-    path = os.path.join(_SCRATCH, "typed_roundtrip")
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch("typed_roundtrip")
     li = rebalance_cpu_heavy(
         load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey",
@@ -635,7 +593,7 @@ def fs_typed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.struct("l_returnflag", "l_linestatus").alias("flags"),
         F.create_map(F.lit("tax"), F.col("l_tax")).alias("props_m"),
     )
-    typed.write.parquet(path)
+    typed.write.mode("overwrite").parquet(path)
     back = spark.read.parquet(path)
     return (
         back.groupBy(
@@ -689,8 +647,7 @@ def fs_read_json_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one scan each side of the write; JSON parse is
     JVM-side with the explicit schema (no sampling pass)."""
-    path = os.path.join(_SCRATCH, "events_nested_json")
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch("events_nested_json")
     ev = load_table(spark, sf_dir, "events")
     nested = ev.select(
         "event_id",
@@ -705,7 +662,7 @@ def fs_read_json_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.col("value").cast("decimal(28,6)").alias("val_dec"),
     )
-    nested.write.json(path)
+    nested.write.mode("overwrite").json(path)
     schema = (
         "event_id BIGINT, who STRUCT<id: BIGINT, bucket: BIGINT>, "
         "tags ARRAY<STRING>, event_type STRING, val_dec DECIMAL(28,6)"
@@ -875,11 +832,9 @@ def fs_parquet_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate; nothing driver-side."""
     results = []
     for codec in ("snappy", "gzip", "zstd"):
-        path = os.path.join(_SCRATCH, f"orders_codec_{codec}")
-        shutil.rmtree(path, ignore_errors=True)
-        load_table(spark, sf_dir, "orders").select("o_totalprice").write.option(
-            "compression", codec
-        ).parquet(path)
+        path = scratch(f"orders_codec_{codec}")
+        prices = load_table(spark, sf_dir, "orders").select("o_totalprice")
+        prices.write.mode("overwrite").option("compression", codec).parquet(path)
         back = spark.read.parquet(path)
         results.append(
             back.agg(
@@ -971,23 +926,21 @@ def fs_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side, so the only shuffle carries (fmt, segment) partials.
     Distinct-count is a second partial pass under the same key —
     Spark's expand-based distinct aggregate, no extra scan."""
-    csv_path = os.path.join(_SCRATCH, "customer_copyto_csv")
-    json_path = os.path.join(_SCRATCH, "customer_copyto_json")
-    shutil.rmtree(csv_path, ignore_errors=True)
-    shutil.rmtree(json_path, ignore_errors=True)
+    csv_path = scratch("customer_copyto_csv")
+    json_path = scratch("customer_copyto_json")
     cust = load_table(spark, sf_dir, "customer")
     # faithful-COPY csv options: Spark's writer TRIMS whitespace by
     # default and CSV conflates ''/NULL without a sentinel — see
     # tests/test_fs_layer.py::test_write_csv_quoting_edge_cases
     (
-        cust.write.option("header", True)
+        cust.write.mode("overwrite").option("header", True)
         .option("ignoreLeadingWhiteSpace", False)
         .option("ignoreTrailingWhiteSpace", False)
         .option("nullValue", "\\N")
         .option("emptyValue", '""')
         .csv(csv_path)
     )
-    cust.write.json(json_path)
+    cust.write.mode("overwrite").json(json_path)
     back_csv = (
         spark.read.schema(cust.schema)
         .option("header", True)
@@ -1034,10 +987,9 @@ def fs_write_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: parallel write (one file per task, no shuffle);
     read-back aggregate partial-aggregates map-side; the only shuffle
     carries per-nation partials."""
-    path = os.path.join(_SCRATCH, "supplier_copyto_orc")
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch("supplier_copyto_orc")
     sup = load_table(spark, sf_dir, "supplier")
-    sup.write.orc(path)
+    sup.write.mode("overwrite").orc(path)
     back = spark.read.schema(sup.schema).orc(path)
     return back.groupBy("s_nationkey").agg(
         F.count(F.lit(1)).alias("n"),

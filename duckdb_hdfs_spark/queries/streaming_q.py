@@ -10,8 +10,6 @@ from __future__ import annotations
 
 import itertools
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -20,6 +18,7 @@ from duckdb_hdfs_spark.operators.genutil import local_frame
 from duckdb_hdfs_spark.queries import query
 from duckdb_hdfs_spark.queries.events import sess_ctes
 from duckdb_hdfs_spark.sources.catalog import load_table
+from duckdb_hdfs_spark.sources.fs import HadoopFs, scratch
 
 _run_counter = itertools.count()
 
@@ -93,25 +92,34 @@ def _ingest_clamp(df: DataFrame, anchor_src) -> DataFrame:
 
 
 def _write_ordered_batches(batches, src: str) -> str:
-    """Append-write each batch DataFrame as one parquet file under
-    ``src`` (cleared first) with file mtimes pinned to strictly
-    increasing minutes, so the file source's oldest-first ordering
-    replays EXACTLY this arrival order — the fixture contract every
-    forced-arrival-order streaming query relies on.  One definition
-    (round-7 review: previously four copies of the glob/utime dance
-    drifted independently)."""
-    import glob as _glob
-
-    shutil.rmtree(src, ignore_errors=True)
-    t0 = 1_700_000_000
+    """Write each batch DataFrame as one parquet file under ``src``
+    (the first write replaces whatever ``src`` held) with file mtimes
+    pinned to strictly increasing minutes, so the file source's
+    oldest-first ordering replays EXACTLY this arrival order — the
+    fixture contract every forced-arrival-order streaming query relies
+    on.  One definition, so the four callers' fixtures cannot drift
+    apart."""
+    fs = HadoopFs(batches[0].sparkSession)
+    t0_ms = 1_700_000_000_000
     seen: set[str] = set()
     for i, b in enumerate(batches):
-        b.repartition(1).write.mode("append").parquet(src)
-        parts = set(_glob.glob(os.path.join(src, "*.parquet"))) - seen
+        b.repartition(1).write.mode("append" if i else "overwrite").parquet(src)
+        parts = {fi.path for fi in fs.glob(f"{src}/*.parquet")} - seen
         for p in parts:
-            os.utime(p, (t0 + 60 * i, t0 + 60 * i))
+            fs.set_mtime_ms(p, t0_ms + 60_000 * i)
         seen |= parts
     return src
+
+
+def _publish_state(fs: HadoopFs, df: DataFrame, state_dir: str) -> None:
+    """Replace the parquet table at ``state_dir`` with ``df``: write a
+    sibling, then swap it in, so a failed write leaves the old state
+    whole."""
+    tmp = state_dir + "_new"
+    df.write.mode("overwrite").parquet(tmp)
+    fs.rm(state_dir, recursive=True)
+    if not fs.mv(tmp, state_dir):
+        raise OSError(f"could not move {tmp} to {state_dir}")
 
 
 def _rewrite_events(
@@ -122,13 +130,9 @@ def _rewrite_events(
     the way; multiple files => multiple micro-batches under
     maxFilesPerTrigger=1, so cross-batch state is actually
     exercised)."""
-    src = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_stream_{tag}",
-        os.path.basename(sf_dir),
-    )
-    shutil.rmtree(src, ignore_errors=True)
-    load_table(spark, sf_dir, "events").repartition(n_files).write.parquet(src)
+    src = scratch(f"stream_{tag}/{os.path.basename(sf_dir)}")
+    events = load_table(spark, sf_dir, "events").repartition(n_files)
+    events.write.mode("overwrite").parquet(src)
     return src
 
 
@@ -456,11 +460,6 @@ def _rewrite_events_split_late(
     an unclamped far-future row would poison max(ts) and push both
     split anchors past the entire real stream (empty batch 1 =
     broken watermark-lag mechanics) before the stream even starts."""
-    src = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_stream_{tag}",
-        os.path.basename(sf_dir),
-    )
     ev = load_table(spark, sf_dir, "events")
     ev = _ingest_clamp(ev, ev)
     row = ev.agg(
@@ -476,7 +475,7 @@ def _rewrite_events_split_late(
             ev.filter(F.col("ts") >= F.lit(mid)),
             ev.filter(F.col("ts") < F.lit(cutoff)),
         ),
-        src,
+        scratch(f"stream_{tag}/{os.path.basename(sf_dir)}"),
     )
 
 
@@ -663,10 +662,7 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     run_id = next(_run_counter)
-    src = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_stream_cdc_{run_id}",
-        os.path.basename(sf_dir),
-    )
+    src = scratch(f"stream_cdc_{run_id}/{os.path.basename(sf_dir)}")
     ods = load_table(spark, sf_dir, "orders")
     batches = (
         ods.select(
@@ -693,14 +689,12 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _write_ordered_batches(batches, src)
 
-    state_dir = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_cdc_state_{run_id}"
-    )
-    shutil.rmtree(state_dir, ignore_errors=True)
+    fs = HadoopFs(spark)
+    state_dir = scratch(f"cdc_state_{run_id}")
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
-        if os.path.exists(state_dir):
+        if fs.exists(state_dir):
             state = s.read.parquet(state_dir)
         else:
             state = local_frame(s, [], log_schema)
@@ -714,10 +708,7 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("o_orderkey", "r.*")
         )
-        tmp = state_dir + "_new"
-        merged.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(state_dir, ignore_errors=True)
-        os.rename(tmp, state_dir)
+        _publish_state(fs, merged, state_dir)
 
     stream = (
         spark.readStream.schema(log_schema)
@@ -836,17 +827,15 @@ def streaming_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     run_id = next(_run_counter)
     src = _rewrite_events(spark, sf_dir, n_files=3, tag=f"hll_{run_id}")
-    state_dir = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_hll_state_{run_id}"
-    )
-    shutil.rmtree(state_dir, ignore_errors=True)
+    fs = HadoopFs(spark)
+    state_dir = scratch(f"hll_state_{run_id}")
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
         partial = batch_df.groupBy("event_type").agg(
             F.hll_sketch_agg("user_id").alias("sk")
         )
-        if os.path.exists(state_dir):
+        if fs.exists(state_dir):
             state = s.read.parquet(state_dir)
             merged = (
                 state.unionByName(partial)
@@ -855,10 +844,7 @@ def streaming_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         else:
             merged = partial
-        tmp = state_dir + "_new"
-        merged.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(state_dir, ignore_errors=True)
-        os.rename(tmp, state_dir)
+        _publish_state(fs, merged, state_dir)
 
     stream = read_event_stream(spark, src, max_files_per_trigger=1)
     run_available_now_apply(stream, apply_batch, output_mode="append")
@@ -984,9 +970,7 @@ def streaming_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             ev_static.filter(F.col("ts") <= F.lit(mid)),
             ev_static.filter(F.col("ts") > F.lit(mid)),
         ),
-        os.path.join(
-            tempfile.gettempdir(), f"spark_graft_stream_louter_split_{run_id}"
-        ),
+        scratch(f"stream_louter_split_{run_id}"),
     )
 
     from duckdb_hdfs_spark.streaming.pipelines import (
@@ -1061,7 +1045,7 @@ def _rewrite_events_time_ordered(
             ev_static.filter(F.col("ts") <= F.lit(mid)),
             ev_static.filter(F.col("ts") > F.lit(mid)),
         ),
-        os.path.join(tempfile.gettempdir(), f"spark_graft_stream_{tag}_split"),
+        scratch(f"stream_{tag}_split"),
     )
 
 
@@ -1156,14 +1140,8 @@ def streaming_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     files periodically — fs_compact_small_files.)"""
     run_id = next(_run_counter)
     src = _rewrite_events(spark, sf_dir, n_files=3, tag=f"psink_{run_id}")
-    out = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_psink_out_{run_id}"
-    )
-    ckpt = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_psink_ckpt_{run_id}"
-    )
-    shutil.rmtree(out, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    out = scratch(f"psink_out_{run_id}")
+    ckpt = scratch(f"psink_ckpt_{run_id}")
     from duckdb_hdfs_spark.streaming.pipelines import read_event_stream
 
     stream = read_event_stream(spark, src, max_files_per_trigger=1)

@@ -643,7 +643,6 @@ def win_value_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         -5,
         5,
-        id_col="event_id",
         out_n="n_similar",
         out_s="_sum_dec",
     )

@@ -3,7 +3,7 @@
 The reference's usage pattern is ``SELECT * FROM
 'hdfs://nn/path/file'`` — a path *is* a table.  Spark equivalent:
 ``spark.read.parquet(path)`` + temp view, or direct-path SQL
-(``SELECT … FROM parquet.`path```, see :func:`sql_path`).
+(``SELECT … FROM parquet.`path```, the ``fs_sql_path`` query).
 
 Schema cache.  A bare ``spark.read.parquet(path)`` infers the schema
 from the parquet footers, which costs one Spark job (plus a listing
@@ -14,8 +14,9 @@ reads every call with ``spark.read.schema(s).parquet(path)``.
 
 - Key: the table path.  The entry holds a signature and the
   ``StructType``; at most one entry per path.
-- Signature: the path's Hadoop ``FileStatus`` (length, modification
-  time) and, for a directory, the name, length and modification time
+- Signature: the path's Hadoop status (length, modification time,
+  read through :class:`~duckdb_hdfs_spark.sources.fs.HadoopFs`) and,
+  for a directory, the name, length and modification time
   of every entry below it (a part rewritten in place does not touch
   its directory's mtime), plus the values of the parquet confs that
   change what inference returns (:data:`_INFERENCE_CONFS`).  Every
@@ -33,16 +34,17 @@ reads every call with ``spark.read.schema(s).parquet(path)``.
   (reading one table twice in a self-join needs distinct attribute
   ids).
 - Still inferred on every read: readers whose contract *is*
-  inference — :func:`sql_path` (direct-path SQL), the CSV/JSON
+  inference — direct-path SQL (``fs_sql_path``), the CSV/JSON
   readers, ``fs_read_schema_merge`` and the audit scripts' own reads.
 """
 
 from __future__ import annotations
 
-from py4j.java_gateway import JavaClass
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+from duckdb_hdfs_spark.sources.fs import HadoopFs
 
 TABLES = (
     "region",
@@ -99,25 +101,19 @@ def table_path(sf_dir: str, name: str) -> str:
 def _signature(spark: SparkSession, path: str) -> tuple | None:
     """What the schema inferred for ``path`` depends on, or None when
     the path's status cannot be read (the caller then never caches)."""
-    sc = spark.sparkContext
-    # a fully-qualified JavaClass costs one py4j round trip, where
-    # ``spark._jvm.org.apache.hadoop.fs.Path`` resolves each package
-    # segment with a round trip of its own
-    jpath = JavaClass("org.apache.hadoop.fs.Path", sc._gateway._gateway_client)(path)
-    fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())
+    fs = HadoopFs(spark)
     try:
-        root = fs.getFileStatus(jpath)
+        root = fs.stat(path)
     except Py4JJavaError:
         return None
     entries = []
     todo = [("", root)]
     while todo:
         name, st = todo.pop()
-        entries.append((name, st.getLen(), st.getModificationTime()))
-        if st.isDirectory():
+        entries.append((name, st.size, st.mtime_ms))
+        if st.is_dir:
             todo += [
-                (f"{name}/{c.getPath().getName()}", c)
-                for c in fs.listStatus(st.getPath())
+                (f"{name}/{c.path.rsplit('/', 1)[-1]}", c) for c in fs.ls(st.path)
             ]
     confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
     return tuple(sorted(entries)), confs
@@ -218,7 +214,3 @@ def load_tables(
         out[name] = df
     return out
 
-
-def sql_path(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
-    """Direct-path SQL — parity with DuckDB's ``FROM 'hdfs://…'``."""
-    return spark.sql(f"SELECT * FROM {fmt}.`{path}`")

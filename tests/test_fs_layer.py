@@ -7,6 +7,14 @@ exact ``spark.hadoop.*`` keys a real cluster consumes."""
 
 from __future__ import annotations
 
+import ast
+import os
+import subprocess
+import sys
+import tempfile
+import textwrap
+from pathlib import Path
+
 import pytest
 
 from duckdb_hdfs_spark.conf import (
@@ -21,7 +29,7 @@ from duckdb_hdfs_spark.conf import (
     can_handle_file,
     parse_url,
 )
-from duckdb_hdfs_spark.sources.fs import HadoopFs
+from duckdb_hdfs_spark.sources.fs import FileInfo, HadoopFs
 
 
 # --------------------------------------------------------------------------
@@ -206,6 +214,33 @@ def test_ls_mv_rm(fs_root):
     assert fs.rm(f"{root}/d/c.txt")
     assert fs.rm(f"{root}/d", recursive=True)
     assert not fs.exists(f"{root}/d")
+
+
+def test_stat_and_set_mtime_ms_roundtrip(fs_root):
+    fs, root, _ = fs_root
+    path = f"{root}/m.bin"
+    fs.write_bytes(path, b"abc")
+    fs.set_mtime_ms(path, 1_700_000_123_000)
+    assert fs.stat(path) == FileInfo(path, 3, 1_700_000_123_000, False)
+    assert fs.mtime_ms(path) == 1_700_000_123_000
+    assert fs.stat(root).is_dir and not fs.is_dir(f"{root}/missing")
+
+
+def test_building_a_path_is_one_py4j_call(fs_root, monkeypatch):
+    from py4j.java_gateway import GatewayClient
+
+    fs, root, _ = fs_root
+    sent = []
+    send = GatewayClient.send_command
+
+    def counting(client, command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):  # GC detach, not work
+            sent.append(command)
+        return send(client, command, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counting)
+    fs._path(f"{root}/x")
+    assert len(sent) == 1, sent
 
 
 def test_write_csv_roundtrip(spark, sf_dir, tmp_path):
@@ -509,3 +544,111 @@ def test_corrupt_format_contracts(spark, sf_dir, tmp_path):
     assert set(moved) == {"part-trunc.orc", "part-zero.orc"}
     assert spark.read.orc(str(orcdir)).count() == want
     con.close()
+
+
+# --------------------------------------------------------------------------
+# one filesystem layer: HadoopFs and the per-process scratch root
+# --------------------------------------------------------------------------
+REPO = Path(__file__).resolve().parent.parent
+PACKAGE = REPO / "duckdb_hdfs_spark"
+_LOCAL_MODULES = {"shutil", "tempfile", "glob"}
+_LOCAL_CALLS = {
+    "os": {"listdir", "walk", "utime", "rename", "remove", "makedirs"},
+    "os.path": {"exists"},
+}
+
+
+def _local_fs_uses(path: Path) -> list[tuple[int, str | None]]:
+    """(line, enclosing function) of every import of a local-only file
+    module and every call of a local-only ``os`` file function."""
+    out = []
+
+    def visit(node, func):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, child.name)
+                continue
+            if isinstance(child, ast.Import):
+                mods = {a.name.split(".")[0] for a in child.names}
+                if mods & _LOCAL_MODULES:
+                    out.append((child.lineno, func))
+            elif isinstance(child, ast.ImportFrom):
+                names = {a.name for a in child.names}
+                if (child.module or "").split(".")[0] in _LOCAL_MODULES or (
+                    names & _LOCAL_CALLS.get(child.module, set())
+                ):
+                    out.append((child.lineno, func))
+            elif isinstance(child, ast.Call) and isinstance(child.func, ast.Attribute):
+                owner = ast.unparse(child.func.value)
+                if child.func.attr in _LOCAL_CALLS.get(owner, ()):
+                    out.append((child.lineno, func))
+            visit(child, func)
+
+    visit(ast.parse(path.read_text()), None)
+    return out
+
+
+def test_queries_touch_files_only_through_hadoop_fs():
+    """No module under queries/, operators/ or sources/ reaches a file
+    through Python's local-only modules; the one exception is the
+    scratch root's own lifecycle in sources/fs.py."""
+    root_module = PACKAGE / "sources" / "fs.py"
+    offenders = [
+        f"{p.relative_to(REPO)}:{line}"
+        for sub in ("queries", "operators", "sources")
+        for p in sorted((PACKAGE / sub).rglob("*.py"))
+        for line, func in _local_fs_uses(p)
+        if not (p == root_module and func in (None, "_prune_stale_scratch"))
+    ]
+    assert offenders == [], "use sources.fs.HadoopFs: " + ", ".join(offenders)
+    assert _local_fs_uses(root_module) != []
+
+
+def test_streaming_scratch_is_removed_at_exit(sf_dir):
+    """A process that runs the state-publishing streaming queries
+    leaves nothing in the temp directory once it exits, and importing
+    the package removes the scratch root of a dead process."""
+    tmp = tempfile.gettempdir()
+    dead = subprocess.Popen([sys.executable, "-c", ""])
+    dead.wait()
+    stale = Path(tmp) / f"duckdb_hdfs_spark_scratch_{dead.pid}"
+    (stale / "leftover").mkdir(parents=True)
+    before = {n for n in os.listdir(tmp) if n.startswith("spark_graft_")}
+    script = textwrap.dedent(
+        f"""
+        import os
+        from duckdb_hdfs_spark.sources.fs import _SCRATCH
+        assert not os.path.exists({str(stale)!r})
+        from duckdb_hdfs_spark import get_spark, stop_spark
+        from duckdb_hdfs_spark.queries import load_all
+
+        reg = load_all()
+        spark = get_spark("scratch")
+        for key in ("streaming_cdc_apply", "streaming_hll_rollup"):
+            assert reg[key].spark(spark, {sf_dir!r}).count() > 0
+        assert sorted(os.listdir(_SCRATCH)) == [
+            "cdc_state_0", "hll_state_1", "stream_cdc_0", "stream_hll_1"
+        ]
+        stop_spark()
+        print(_SCRATCH)
+        """
+    )
+    env = dict(
+        os.environ,
+        PYTHONPATH=str(REPO),
+        SPARK_GRAFT_CPUS="2",
+        SPARK_GRAFT_DRIVER_MEM="1g",
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    root = out.stdout.strip().splitlines()[-1]
+    assert root.startswith(os.path.join(tmp, "duckdb_hdfs_spark_scratch_"))
+    assert not os.path.exists(root)
+    after = {n for n in os.listdir(tmp) if n.startswith("spark_graft_")}
+    assert after <= before, sorted(after - before)

@@ -714,7 +714,7 @@ def test_typed_roundtrip_writes_one_file_per_slot(spark, sf_dir):
     import os
 
     from duckdb_hdfs_spark.operators.rebalance import BYTES_PER_SLOT
-    from duckdb_hdfs_spark.queries.fslayer import _SCRATCH
+    from duckdb_hdfs_spark.sources.fs import _SCRATCH
     from duckdb_hdfs_spark.sources.catalog import load_table
 
     src = load_table(spark, sf_dir, "lineitem").select(

@@ -460,9 +460,7 @@ def test_range_frame_count_decsum_adversarial_panel(spark):
             F.sum(F.col("value").cast("decimal(28,6)")).over(w), 2
         ).cast("double").alias("s1"),
     )
-    got = range_frame_count_decsum(
-        df, ["event_type"], "value", -5, 5, "event_id"
-    ).select(
+    got = range_frame_count_decsum(df, ["event_type"], "value", -5, 5).select(
         "event_id",
         F.col("__n").alias("n2"),
         F.round(F.col("__s"), 2).cast("double").alias("s2"),
@@ -478,3 +476,24 @@ def test_range_frame_count_decsum_adversarial_panel(spark):
         .collect()
     )
     assert not bad, bad
+
+
+def test_range_frame_count_decsum_keeps_duplicated_rows(spark):
+    """Exact duplicate rows are distinct window rows: each duplicate
+    gets its own output row, and each counts in the other's frame —
+    the duplicated-rows audit shape, where a key column no longer
+    identifies a row."""
+    from pyspark.sql import Window
+
+    from duckdb_hdfs_spark.operators.ranks import range_frame_count_decsum
+
+    rows = [(i % 9, "ab"[i % 2], float(i % 13)) for i in range(30)]
+    df = spark.createDataFrame(
+        rows + rows[:12], "event_id long, event_type string, value double"
+    )
+    w = Window.partitionBy("event_type").orderBy("value").rangeBetween(-5, 5)
+    s = F.sum(F.col("value").cast("decimal(28,6)"))
+    naive = df.select("*", F.count(F.lit(1)).over(w), s.over(w))
+    got = range_frame_count_decsum(df, ["event_type"], "value", -5, 5)
+    assert got.count() == 42
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, naive.collect()))
