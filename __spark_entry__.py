@@ -17,10 +17,13 @@ def _ensure_session_confs(spark: SparkSession) -> None:
     when the driver supplies its OWN session (round-7 review): the
     catalog's naive-timestamp handling is value-identical to DuckDB
     only under a UTC session timezone, and sessions built by
-    duckdb_hdfs_spark.session.get_spark already run this way.
-    Idempotent; runtime-settable confs only."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    duckdb_hdfs_spark.session.get_spark already run this way
+    (``TIMESTAMP_PARITY_CONFS``).  Idempotent; runtime-settable confs
+    only."""
+    from duckdb_hdfs_spark.session import TIMESTAMP_PARITY_CONFS
+
+    for k, v in TIMESTAMP_PARITY_CONFS.items():
+        spark.conf.set(k, v)
 
 
 def entry(spark: SparkSession) -> DataFrame:

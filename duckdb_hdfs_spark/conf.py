@@ -10,7 +10,8 @@ libhdfs3 connection per namenode (hadoopfs.hpp:246-250).
 Spark's Hadoop client already implements connection pooling, HA
 failover, and short-circuit local reads — the engine work is mapping
 the same four knobs onto the right ``spark.hadoop.*`` keys.  This
-module produces that mapping; apply it with
+module produces that mapping; :func:`duckdb_hdfs_spark.session.builder`
+applies ``HdfsParams.from_env()``, and other params go through
 ``apply_hdfs_conf(builder, params)`` before session creation or pass
 individual ``fs.*``/``dfs.*`` keys on a live session's
 ``sparkContext._jsc.hadoopConfiguration()`` (read-only ops only).

@@ -83,9 +83,6 @@ from pyspark.sql import DataFrame
 #: grade to one slot and are never repartitioned.
 BYTES_PER_SLOT = 24 << 10
 
-#: Backwards-compatible alias (round-3 name; tests referenced it).
-MIN_BYTES_PER_SLOT = BYTES_PER_SLOT
-
 
 def _parquet_files(df: DataFrame, most: int) -> list[str] | None:
     """The input files of ``df`` when every leaf of its plan is a

@@ -24,7 +24,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from duckdb_hdfs_spark.functions.vectors import (
-    dot,
     dot_expr,
     dot_fold_sql_spark,
     norm_fold_expr,
@@ -46,16 +45,6 @@ def hyperplanes() -> list[list[int]]:
 
 LSH_BAND_BITS = 4
 LSH_BANDS = N_PLANES // LSH_BAND_BITS  # 3
-
-
-def lsh_signature(emb) -> "F.Column":
-    """Bit-signature: sign of <v, plane_j> for md5-derived ±1 planes."""
-    sig = F.lit(0).cast("bigint")
-    for j, plane in enumerate(hyperplanes()):
-        plane_col = F.array(*[F.lit(float(s)) for s in plane])
-        proj = dot(emb, plane_col)
-        sig = sig + F.when(proj > 0, F.lit(1 << j)).otherwise(F.lit(0))
-    return sig
 
 
 def lsh_band_keys(emb) -> "F.Column":

@@ -9,12 +9,6 @@ explicit formulations for the cases AQE cannot fix:
   splits it across ``n_salts`` reducers and a second (tiny) aggregate
   merges the partials.  Requires an algebraic aggregate (sum/count/
   min/max — anything with a merge function).
-- ``salted_broadcast_left``: join where the LEFT fact side is skewed
-  on the join key and the right side is broadcastable — broadcast
-  sidesteps key co-location entirely, so no row movement depends on
-  the hot key at all.  (For two BIG sides, AQE skew-join or key
-  isolation — split hot keys out, broadcast their right-side rows —
-  is the pattern; the helper keeps the common case simple.)
 """
 
 from __future__ import annotations
@@ -52,10 +46,3 @@ def salted_agg(
         *[getattr(F, m)(f"__p_{name}").alias(name) for name, _, m in aggs]
     )
 
-
-def salted_broadcast_left(
-    left: DataFrame, right: DataFrame, on: Column
-) -> DataFrame:
-    """Skewed-left join: broadcast the (small) right side so the hot
-    left keys never shuffle."""
-    return left.join(F.broadcast(right), on)

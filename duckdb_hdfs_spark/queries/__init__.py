@@ -32,7 +32,6 @@ class QueryDef:
     spark: SparkQuery
     oracle: str | None = None  # DuckDB SQL; None → rows-only check
     headline: bool = False  # include in bench.py
-    doc: str = ""
 
 
 REGISTRY: dict[str, QueryDef] = {}
@@ -162,9 +161,7 @@ def query(
     def deco(fn: SparkQuery) -> SparkQuery:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        REGISTRY[name] = QueryDef(
-            name=name, spark=fn, oracle=oracle, headline=headline, doc=fn.__doc__ or ""
-        )
+        REGISTRY[name] = QueryDef(name=name, spark=fn, oracle=oracle, headline=headline)
         return fn
 
     return deco

@@ -30,13 +30,25 @@ from duckdb_hdfs_spark.sources.catalog import load_table, table_path
 from duckdb_hdfs_spark.sources.fs import HadoopFs, scratch
 
 
+def _matches(fs: HadoopFs, pattern: str) -> list[str]:
+    """The paths ``pattern`` matches, to hand a reader in its place:
+    given a glob, Spark's metadata-directory probe stats the pattern
+    as one file and logs a ``FileNotFoundException`` warning on every
+    read.  Raises when nothing matches, as the reader would."""
+    paths = [fi.path for fi in fs.glob(pattern)]
+    if not paths:
+        raise FileNotFoundError(f"no path matches {pattern}")
+    return paths
+
+
 # --------------------------------------------------------------------------
 @query("fs_read_parquet", oracle="SELECT * FROM nation")
 def fs_read_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Glob-path parquet scan (reference: Glob + OpenFile + Read →
     DuckDB parquet reader; here: Spark DataSource scan with
     projection/filter pushdown — see tests/test_plans.py)."""
-    return spark.read.parquet(f"{sf_dir.rstrip('/')}/nati*n.parquet")
+    pattern = f"{sf_dir.rstrip('/')}/nati*n.parquet"
+    return spark.read.parquet(*_matches(HadoopFs(spark), pattern))
 
 
 # --------------------------------------------------------------------------
@@ -337,18 +349,19 @@ def fs_read_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     fails loudly instead of silently comparing the wrong files."""
     fs = HadoopFs(spark)
     bound = "/root/testdata/sf0.01"
-
-    def inventory(d: str) -> list[str]:
-        return [os.path.basename(fi.path) for fi in fs.glob(f"{d}/*.parquet")]
-
-    want, got = inventory(bound), inventory(sf_dir.rstrip("/"))
+    paths = _matches(fs, f"{bound}/*.parquet")
+    want = [os.path.basename(p) for p in paths]
+    got = [
+        os.path.basename(fi.path)
+        for fi in fs.glob(f"{sf_dir.rstrip('/')}/*.parquet")
+    ]
     if want != got:
         raise ValueError(
             f"fs_read_binary is bound to {bound} (the oracle's read_blob "
             f"path is a literal); sf_dir={sf_dir} holds a different table "
             f"inventory: {got} vs {want}"
         )
-    df = spark.read.format("binaryFile").load(f"{bound}/*.parquet")
+    df = spark.read.format("binaryFile").load(paths)
     hexstr = F.lower(F.hex(F.col("content")))
     return df.select(
         F.element_at(F.split(F.col("path"), "/"), -1).alias("file_name"),
@@ -385,14 +398,6 @@ def fs_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the small side instead, which is equally shuffle-free."""
     from duckdb_hdfs_spark.sources.bucketing import write_bucketed
 
-    # drop-and-clean first: a FRESH session does not know the tables,
-    # but their warehouse locations survive from earlier runs and
-    # saveAsTable refuses to reuse an unmanaged leftover location
-    fs = HadoopFs(spark)
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").rstrip("/")
-    for tbl in ("fsq_bucketed_orders", "fsq_bucketed_lineitem"):
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        fs.rm(f"{warehouse}/{tbl}", recursive=True)
     write_bucketed(
         load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus"

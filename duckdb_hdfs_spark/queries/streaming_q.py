@@ -126,9 +126,8 @@ def _rewrite_events(
     spark: SparkSession, sf_dir: str, n_files: int, tag: str
 ) -> str:
     """Materialize the events table as ``n_files`` parquet files for
-    the file-source stream (normalizes the TIMESTAMP(NANOS) column on
-    the way; multiple files => multiple micro-batches under
-    maxFilesPerTrigger=1, so cross-batch state is actually
+    the file-source stream (multiple files => multiple micro-batches
+    under maxFilesPerTrigger=1, so cross-batch state is actually
     exercised)."""
     src = scratch(f"stream_{tag}/{os.path.basename(sf_dir)}")
     events = load_table(spark, sf_dir, "events").repartition(n_files)
@@ -155,9 +154,8 @@ GROUP BY 1, 2, 3
 def streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream → 1-day watermarked tumbling windows →
     complete-mode memory sink, drained with availableNow.  The events
-    file is re-written through the nano-timestamp-normalizing loader
-    first (the raw parquet uses TIMESTAMP(NANOS), which the stream
-    schema reads as proper timestamps after the rewrite)."""
+    table is staged first as the stream's source directory
+    (:func:`_rewrite_events`, one file here)."""
     from duckdb_hdfs_spark.streaming.pipelines import (
         read_event_stream,
         run_available_now_to_memory,

@@ -17,7 +17,21 @@ import os
 
 from pyspark.sql import SparkSession
 
+from duckdb_hdfs_spark.conf import HdfsParams, apply_hdfs_conf
+
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+#: The confs DuckDB timestamp parity depends on, read by
+#: :func:`builder`, ``__spark_entry__`` (which pins them on a session
+#: the caller built) and :func:`~duckdb_hdfs_spark.sources.catalog.load_table`.
+#: Naive (isAdjustedToUTC=false) parquet timestamps then read as
+#: session-local TIMESTAMP, as DuckDB reads them, not as TIMESTAMP_NTZ,
+#: which ``unix_micros``, ``window`` … reject; under a UTC session
+#: timezone that is a wall-clock identity.
+TIMESTAMP_PARITY_CONFS = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+}
 
 
 def builder(app_name: str = "duckdb-hdfs-spark", cpus: str | int | None = None):
@@ -54,9 +68,8 @@ def builder(app_name: str = "duckdb-hdfs-spark", cpus: str | int | None = None):
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.parquet.aggregatePushdown", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(map=TIMESTAMP_PARITY_CONFS)
         # progress records back the late-data accounting in
         # streaming/pipelines.dropped_by_watermark: the 100-entry
         # default silently evicts early micro-batches on long
@@ -67,6 +80,9 @@ def builder(app_name: str = "duckdb-hdfs-spark", cpus: str | int | None = None):
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
+    # the reference's HDFS_* connection variables (conf.HdfsParams);
+    # with none set this adds no key
+    b = apply_hdfs_conf(b, HdfsParams.from_env())
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
         b = b.master(f"local[{cpus}]")
     return b

@@ -10,12 +10,18 @@ it across every downstream join.
 
 Spark specifics: bucketing requires ``saveAsTable`` (metastore
 bookkeeping of the hash function + count); both sides must bucket on
-the join key with compatible bucket counts.
+the join key with compatible bucket counts.  Each table's files live
+at ``scratch("warehouse/<table>")``, under the per-process scratch
+root, not in the working directory's ``spark-warehouse``: an
+overwrite replaces them, and no earlier process's leftover location
+can block the write.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+
+from duckdb_hdfs_spark.sources.fs import scratch
 
 
 def write_bucketed(
@@ -32,6 +38,7 @@ def write_bucketed(
         df.write.mode("overwrite")
         .format("parquet")
         .bucketBy(n_buckets, bucket_cols[0], *bucket_cols[1:])
+        .option("path", scratch(f"warehouse/{table}"))
     )
     if sort_cols:
         writer = writer.sortBy(sort_cols[0], *sort_cols[1:])

@@ -21,13 +21,10 @@ reads every call with ``spark.read.schema(s).parquet(path)``.
   its directory's mtime), plus the values of the parquet confs that
   change what inference returns (:data:`_INFERENCE_CONFS`).  Every
   call recomputes it; a changed signature re-infers and replaces the
-  entry.  An entry inferred with ``nanosAsLong=false`` drops that
-  conf from its signature: inference under ``false`` raises on a
-  ``TIMESTAMP(NANOS)`` column, so a schema it returned has none and
-  reads the same under either value — the first ``events`` load,
-  which flips the conf to ``true``, re-infers no other table.  A path
-  whose status cannot be read is never cached: its read infers, and
-  fails, exactly as an uncached read does.
+  entry.  The NTZ-inference conf is not part of it: :func:`load_table`
+  sets that conf just before the lookup, so its value never varies
+  there.  A path whose status cannot be read is never cached: its
+  read infers, and fails, exactly as an uncached read does.
 - Never cached: a ``DataFrame`` or any other JVM-backed object — a
   ``StructType`` is pure Python, so the cache outlives
   ``stop_spark()``, and every call builds a fresh ``DataFrame``
@@ -36,6 +33,14 @@ reads every call with ``spark.read.schema(s).parquet(path)``.
 - Still inferred on every read: readers whose contract *is*
   inference — direct-path SQL (``fs_sql_path``), the CSV/JSON
   readers, ``fs_read_schema_merge`` and the audit scripts' own reads.
+
+Parquet ``TIMESTAMP(NANOS)`` columns are not supported: Spark has no
+nanosecond timestamp type, so under the default
+``spark.sql.legacy.parquet.nanosAsLong=false`` inference of such a
+column fails with ``PARQUET_TYPE_ILLEGAL`` and nothing is cached (a
+session the user sets to ``true`` reads it as ``bigint`` nanoseconds,
+like any other inference conf).  Every table in the test data stores
+``TIMESTAMP(MICROS)``.
 """
 
 from __future__ import annotations
@@ -44,6 +49,7 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from duckdb_hdfs_spark.session import TIMESTAMP_PARITY_CONFS
 from duckdb_hdfs_spark.sources.fs import HadoopFs
 
 TABLES = (
@@ -59,32 +65,13 @@ TABLES = (
     "embeddings",
 )
 
-#: small dimension tables safe to broadcast at ANY scale factor —
-#: their cardinality is fixed (region=5, nation=25) or grows far
-#: slower than the fact tables.
-BROADCAST_DIMS = ("region", "nation")
-
-
-#: tables with parquet TIMESTAMP(NANOS) columns — Spark's reader has
-#: no nanosecond timestamp type, so these are read as raw int64 ns
-#: (``spark.sql.legacy.parquet.nanosAsLong``) and converted to
-#: microsecond timestamps (matching DuckDB's ``epoch_us`` floor).
-_NANO_TS_COLUMNS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
-
-#: Naive (isAdjustedToUTC=false) parquet timestamps read as
-#: TIMESTAMP_NTZ under Spark 4's default NTZ inference, which the
-#: timestamp function surface (``unix_micros``, ``window`` …) rejects.
-#: DuckDB reads the same columns as plain TIMESTAMP, so for oracle
-#: parity we pin the pre-3.4 behavior: naive parquet micros ==
-#: session-local TIMESTAMP (session tz is UTC — value-identity).
+_TZ_CONF = "spark.sql.session.timeZone"
 _NTZ_CONF = "spark.sql.parquet.inferTimestampNTZ.enabled"
-_NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
 #: session confs whose values change the schema footer inference
 #: returns — part of every cached schema's signature
 _INFERENCE_CONFS = (
-    _NANOS_CONF,  # first: see _nanos_free
-    _NTZ_CONF,
+    "spark.sql.legacy.parquet.nanosAsLong",
     "spark.sql.parquet.binaryAsString",
     "spark.sql.parquet.int96AsTimestamp",
     "spark.sql.parquet.mergeSchema",
@@ -119,25 +106,15 @@ def _signature(spark: SparkSession, path: str) -> tuple | None:
     return tuple(sorted(entries)), confs
 
 
-def _nanos_free(sig: tuple) -> tuple:
-    """``sig`` with its ``nanosAsLong`` value (the first conf) blanked."""
-    files, confs = sig
-    return files, (None,) + confs[1:]
-
-
 def _schema(spark: SparkSession, path: str) -> StructType:
     """The table's inferred schema: from the cache while the path's
     signature is unchanged, else inferred (one Spark job) and cached."""
     sig = _signature(spark, path)
     hit = _SCHEMAS.get(path)
-    if sig is not None and hit is not None and hit[0] in (sig, _nanos_free(sig)):
+    if hit is not None and hit[0] == sig:
         return hit[1]
     schema = spark.read.parquet(path).schema
     if sig is not None:
-        # inferred under nanosAsLong=false: valid under either value
-        # (module docstring)
-        if sig[1][0] == "false":
-            sig = _nanos_free(sig)
         _SCHEMAS[path] = (sig, schema)
     return schema
 
@@ -151,54 +128,44 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     change (see the module docstring for the key, the invalidation,
     and what is never cached).  Each call returns a new DataFrame.
 
-    Session-conf contract (round-7 review made this explicit): this
-    PERMANENTLY sets ``spark.sql.parquet.inferTimestampNTZ.enabled=
-    false`` and, for nano-timestamp tables, ``spark.sql.legacy.
-    parquet.nanosAsLong=true`` on the session.  A scoped
-    set-and-restore is NOT safe here: parquet scans consult these
-    confs when an ACTION plans, not when ``spark.read`` builds the
-    frame, so restoring after this call would race every downstream
-    job of the returned (lazy) DataFrame.  Sessions from
-    :func:`duckdb_hdfs_spark.session.get_spark` already run with the
-    NTZ conf at this value; an externally built session that needs
-    different parquet semantics for its own reads should use a
-    separate session for those.  The NTZ-cast fallback below keeps
-    THIS loader correct even when the session captured the default
-    confs before the call (there is no per-read option for either
-    knob — verified against Spark 4.1)."""
+    Session-conf contract: this PERMANENTLY sets
+    ``spark.sql.parquet.inferTimestampNTZ.enabled`` to its value in
+    :data:`~duckdb_hdfs_spark.session.TIMESTAMP_PARITY_CONFS` (naive
+    parquet timestamps read as session-local TIMESTAMP, as DuckDB
+    reads them).  A scoped set-and-restore is NOT safe here: parquet
+    scans consult the conf when an ACTION plans, not when
+    ``spark.read`` builds the frame, so restoring after this call
+    would race every downstream job of the returned (lazy) DataFrame.
+    Sessions from :func:`duckdb_hdfs_spark.session.get_spark` already
+    run with it; an externally built session that needs different
+    parquet semantics for its own reads should use a separate session
+    for those.  There is no per-read option for the conf (verified
+    against Spark 4.1)."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, TimestampNTZType
+    from pyspark.sql.types import TimestampNTZType
 
-    nano_cols = _NANO_TS_COLUMNS.get(name, ())
-    if nano_cols:
-        spark.conf.set(_NANOS_CONF, "true")
-    spark.conf.set(_NTZ_CONF, "false")
+    spark.conf.set(_NTZ_CONF, TIMESTAMP_PARITY_CONFS[_NTZ_CONF])
     path = table_path(sf_dir, name)
     schema = _schema(spark, path)
     df = spark.read.schema(schema).parquet(path)
-    for c in nano_cols:
-        if isinstance(schema[c].dataType, LongType):
-            df = df.withColumn(
-                c, F.timestamp_micros(F.expr(f"`{c}` div 1000"))
-            )
-    # belt-and-braces for externally built sessions where the conf
-    # was captured before this call: NTZ → session-tz timestamp is a
-    # wall-clock identity ONLY under a UTC session timezone.  The tz
-    # conf is set just for the cast ANALYSIS (Spark resolves the
-    # cast's timeZoneId eagerly, at withColumn time) and restored —
-    # an externally built session deliberately running in another
-    # timezone keeps its semantics for every other query.
-    # Top-level fields only — the test tables are flat; nested NTZ
-    # inside struct/array would need a recursive rewrite.
+    # a timestamp_ntz column still infers as NTZ under the conf above
+    # when the file says so (Spark-written timestamp_ntz parquet, seen
+    # on Spark 4.1.2); cast it to a session-tz timestamp, a wall-clock
+    # identity ONLY under a UTC session timezone.  The tz conf is set
+    # just for the cast ANALYSIS (Spark resolves the cast's timeZoneId
+    # eagerly, at withColumns time) and restored — an externally built
+    # session deliberately running in another timezone keeps its
+    # semantics for every other query.  Top-level fields only — the
+    # test tables are flat; nested NTZ inside struct/array would need
+    # a recursive rewrite.
     ntz = [f.name for f in schema.fields if isinstance(f.dataType, TimestampNTZType)]
     if ntz:
-        prev_tz = spark.conf.get("spark.sql.session.timeZone")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        prev_tz = spark.conf.get(_TZ_CONF)
+        spark.conf.set(_TZ_CONF, TIMESTAMP_PARITY_CONFS[_TZ_CONF])
         try:
-            for c in ntz:
-                df = df.withColumn(c, F.col(c).cast("timestamp"))
+            df = df.withColumns({c: F.col(c).cast("timestamp") for c in ntz})
         finally:
-            spark.conf.set("spark.sql.session.timeZone", prev_tz)
+            spark.conf.set(_TZ_CONF, prev_tz)
     return df
 
 

@@ -355,32 +355,30 @@ def drain(q, timeout_s: int, what: str = "streaming query") -> None:
         raise TimeoutError(f"{what} did not finish in {timeout_s}s")
 
 
+#: state-partition count for every drain — see
+#: run_available_now_to_memory's docstring
+_DRAIN_STATE_PARTITIONS = "8"
+
+
 @contextlib.contextmanager
-def _state_partitions(spark: SparkSession, n: int | None):
+def _state_partitions(spark: SparkSession):
     """Scope ``spark.sql.shuffle.partitions`` to a drain's .start()
     call (state-partition sizing — see run_available_now_to_memory's
     docstring); restores the session value on exit.  Mutating the
     session-global conf is only safe because these drains run
     single-threaded per session: nothing else plans a query between
     set and restore (streaming clones the session at start, so the
-    running drain keeps its value after restore).  ``n=None`` keeps
-    the session value untouched."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions") if n is not None else None
-    if n is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    running drain keeps its value after restore)."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", _DRAIN_STATE_PARTITIONS)
     try:
         yield
     finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def run_available_now_to_memory(
-    df: DataFrame,
-    name: str,
-    output_mode: str = "append",
-    timeout_s: int = 120,
-    shuffle_partitions: int | None = 8,
+    df: DataFrame, name: str, output_mode: str = "append"
 ) -> list:
     """Drain the current input with an availableNow trigger into an
     in-memory table ``name`` (tests/backfills).  Returns the query's
@@ -388,21 +386,20 @@ def run_available_now_to_memory(
     runtime metrics — e.g. ``stateOperators[].numRowsDroppedByWatermark``
     for late-data accounting.
 
-    ``shuffle_partitions``: state-partition sizing for THIS drain.
-    A stateful query locks its state-store partition count from
-    ``spark.sql.shuffle.partitions`` at its first micro-batch, and
-    every subsequent batch commits every partition of every state
-    store — so a one-file-per-trigger drain over a few thousand rows
-    pays (batches x stores x partitions) commit overhead scaled to
-    the SESSION's batch-sized default (32), not to the stream.  The
-    default 8 sizes state to these drains (measured: the
-    two-state-store stream-stream join fell 28s → 8s warm, results
-    identical); pass None to keep the session value, or larger for
-    bigger backfills.  The session conf is restored right after
-    start — streaming isolates itself by cloning the session there,
-    so the running drain keeps its value.  Production sizes state
-    partitions the same way: to the stream's key cardinality and
-    cluster, independent of the batch-shuffle default.  Results are
+    State-partition sizing: a stateful query locks its state-store
+    partition count from ``spark.sql.shuffle.partitions`` at its first
+    micro-batch, and every subsequent batch commits every partition of
+    every state store — so a one-file-per-trigger drain over a few
+    thousand rows pays (batches x stores x partitions) commit overhead
+    scaled to the SESSION's batch-sized default (32), not to the
+    stream.  Every drain therefore starts with
+    ``_DRAIN_STATE_PARTITIONS`` (8), sized to these drains (measured:
+    the two-state-store stream-stream join fell 28s → 8s warm, results
+    identical).  The session conf is restored right after start —
+    streaming isolates itself by cloning the session there, so the
+    running drain keeps its value.  Production sizes state partitions
+    the same way: to the stream's key cardinality and cluster,
+    independent of the batch-shuffle default.  Results are
     partition-count-independent (pinned by the oracle and the
     shuffle.partitions=7 sweep probes).
 
@@ -412,7 +409,7 @@ def run_available_now_to_memory(
     default silently evicts early micro-batches on long one-file-per-
     trigger drains, undercounting the audit (round-7 review)."""
     spark = df.sparkSession
-    with _state_partitions(spark, shuffle_partitions):
+    with _state_partitions(spark):
         q = (
             df.writeStream.format("memory")
             .queryName(name)
@@ -420,7 +417,7 @@ def run_available_now_to_memory(
             .trigger(availableNow=True)
             .start()
         )
-    drain(q, timeout_s, f"streaming query {name}")
+    drain(q, 120, f"streaming query {name}")
     return list(q.recentProgress)
 
 
@@ -434,40 +431,33 @@ def dropped_by_watermark(progress: list) -> int:
     )
 
 
-def run_available_now_apply(
-    df: DataFrame,
-    fn,
-    output_mode: str = "update",
-    timeout_s: int = 180,
-    shuffle_partitions: int | None = 8,
-) -> None:
+def run_available_now_apply(df: DataFrame, fn, output_mode: str = "update") -> None:
     """Drain with availableNow through a caller-supplied foreachBatch
-    function (idempotent sinks: CDC apply, MERGE publishing).
-    ``shuffle_partitions``: same drain-proportionate state sizing as
+    function (idempotent sinks: CDC apply, MERGE publishing), with the
+    same drain-proportionate state sizing as
     :func:`run_available_now_to_memory` (see its docstring)."""
     spark = df.sparkSession
-    with _state_partitions(spark, shuffle_partitions):
+    with _state_partitions(spark):
         q = (
             df.writeStream.foreachBatch(fn)
             .outputMode(output_mode)
             .trigger(availableNow=True)
             .start()
         )
-    drain(q, timeout_s, "streaming apply")
+    drain(q, 180, "streaming apply")
 
 
-def run_available_now_foreach_batch(
-    df: DataFrame, collect_into: list, output_mode: str = "update", timeout_s: int = 120
-) -> None:
-    """Drain with availableNow, appending each micro-batch's rows (as
-    Row list, tagged with batch_id) into ``collect_into`` — a thin
-    sink over :func:`run_available_now_apply` (round-7 review: the
-    drain/guard block was previously copied verbatim)."""
+def run_available_now_foreach_batch(df: DataFrame, collect_into: list) -> None:
+    """Drain with availableNow in update mode, appending each
+    micro-batch's rows (as Row list, tagged with batch_id) into
+    ``collect_into`` — a thin sink over :func:`run_available_now_apply`
+    (round-7 review: the drain/guard block was previously copied
+    verbatim)."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         collect_into.append((batch_id, batch_df.collect()))
 
-    run_available_now_apply(df, sink, output_mode=output_mode, timeout_s=timeout_s)
+    run_available_now_apply(df, sink)
 
 
 SESSION_OUT_SCHEMA = StructType(

@@ -414,9 +414,6 @@ def main() -> int:
 
     spark = get_spark("corrupt-audit")
     spark.sparkContext.setLogLevel("FATAL")
-    # raw footer reads below touch the nano-timestamp events file
-    # before any load_table() has set the session's nanos handling
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     failures: list[str] = []
 

@@ -5,11 +5,15 @@ fact-fact join into local work."""
 
 from __future__ import annotations
 
+from pathlib import Path
+from urllib.parse import urlparse
+
 import pytest
 from pyspark.sql import functions as F
 
 from duckdb_hdfs_spark.sources.bucketing import write_bucketed
 from duckdb_hdfs_spark.sources.catalog import load_table
+from duckdb_hdfs_spark.sources.fs import scratch
 
 
 @pytest.fixture(scope="module")
@@ -79,3 +83,25 @@ def test_cobucketed_join_matches_unbucketed(spark, sf_dir, bucketed_tables):
         .agg(F.count(F.lit(1)).alias("n"))
     )
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
+def test_bucketed_join_key_writes_under_scratch(spark, sf_dir):
+    """``fs_bucketed_join`` keeps its tables under the per-process
+    scratch root: it runs twice in one process with the same rows and
+    leaves nothing new in ``spark.sql.warehouse.dir``."""
+    from duckdb_hdfs_spark.queries import load_all
+
+    warehouse = Path(urlparse(spark.conf.get("spark.sql.warehouse.dir")).path)
+
+    def below() -> list[str]:
+        return sorted(map(str, warehouse.rglob("*")))
+
+    before = below()
+    run = load_all()["fs_bucketed_join"].spark
+    first = sorted(map(tuple, run(spark, sf_dir).collect()))
+    assert first and sorted(map(tuple, run(spark, sf_dir).collect())) == first
+    assert below() == before
+    location = spark.sql("DESCRIBE TABLE EXTENDED fsq_bucketed_orders").filter(
+        "col_name = 'Location'"
+    ).first()["data_type"]
+    assert urlparse(location).path == scratch("warehouse/fsq_bucketed_orders")

@@ -13,12 +13,15 @@ from pathlib import Path
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
+from pyspark.errors import AnalysisException
 
 from duckdb_hdfs_spark.queries._helpers import _t
 from duckdb_hdfs_spark.sources import catalog
 from duckdb_hdfs_spark.sources.catalog import load_table
 
 REPO = Path(__file__).resolve().parent.parent
+_NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
 
 def _jobs(spark, group: str, fn):
@@ -129,59 +132,59 @@ def test_load_table_after_session_restart(sf_dir):
 
 def _with_nanos(spark, value: str):
     """Set ``nanosAsLong`` to ``value``; return the restore callback."""
-    prev = spark.conf.get(catalog._NANOS_CONF)
-    spark.conf.set(catalog._NANOS_CONF, value)
-    return lambda: spark.conf.set(catalog._NANOS_CONF, prev)
+    prev = spark.conf.get(_NANOS_CONF)
+    spark.conf.set(_NANOS_CONF, value)
+    return lambda: spark.conf.set(_NANOS_CONF, prev)
 
 
-def test_nanos_file_cannot_infer_under_false(spark, tmp_path):
-    """The ground for dropping ``nanosAsLong=false`` from a signature:
-    inference under ``false`` raises on a TIMESTAMP(NANOS) column, so
-    no schema cached under ``false`` can hold one — and a failed
-    inference caches nothing."""
-    path = tmp_path / "ns.parquet"
+def _write_nanos_table(d: Path) -> None:
+    """``d/ns.parquet``: one TIMESTAMP(NANOS) column."""
     ts = pa.array([1_000_000_001], type=pa.timestamp("ns"))
-    pq.write_table(pa.table({"ts": ts}), path, version="2.6")
-    restore = _with_nanos(spark, "false")
+    pq.write_table(pa.table({"ts": ts}), d / "ns.parquet", version="2.6")
+
+
+def _assert_nanos_fails_uncached(spark, d: Path) -> None:
+    with pytest.raises(AnalysisException, match="PARQUET_TYPE_ILLEGAL"):
+        load_table(spark, str(d), "ns")
+    assert f"{d}/ns.parquet" not in catalog._SCHEMAS
+
+
+def test_nanos_column_fails_loudly_in_every_load_order(spark, sf_dir, tmp_path):
+    """A TIMESTAMP(NANOS) column raises Spark's ``PARQUET_TYPE_ILLEGAL``
+    and caches nothing, whether or not ``events`` was loaded first:
+    loading a table changes no inference conf of the session."""
+    _write_nanos_table(tmp_path)
+    assert spark.conf.get(_NANOS_CONF) == "false"
+    _assert_nanos_fails_uncached(spark, tmp_path)
+    load_table(spark, sf_dir, "events")
+    assert spark.conf.get(_NANOS_CONF) == "false"
+    _assert_nanos_fails_uncached(spark, tmp_path)
+
+
+def test_warm_table_stays_warm_after_events_load(spark, sf_dir, tmp_path):
+    shutil.copy(f"{sf_dir}/nation.parquet", tmp_path / "nation.parquet")
+
+    def load():
+        return load_table(spark, str(tmp_path), "nation")
+
+    _, cold = _jobs(spark, "events-cold", load)
+    assert cold
+    load_table(spark, sf_dir, "events")
+    df, warm = _jobs(spark, "events-warm", load)
+    assert warm == []
+    assert df.count() == 25
+
+
+def test_entry_inferred_under_user_nanos_true_is_reinferred(spark, tmp_path):
+    """``nanosAsLong`` stays an inference input: an entry inferred
+    while the user has it at ``true`` (the column reads as ``bigint``)
+    does not serve ``false``, where the same file must fail."""
+    _write_nanos_table(tmp_path)
+    restore = _with_nanos(spark, "true")
     try:
-        try:
-            load_table(spark, str(tmp_path), "ns")
-        except Exception as e:  # noqa: BLE001 - the error class is the point
-            assert "PARQUET_TYPE_ILLEGAL" in str(e)
-        else:
-            raise AssertionError("a nanos column inferred under nanosAsLong=false")
-        assert str(path) not in catalog._SCHEMAS
-        spark.conf.set(catalog._NANOS_CONF, "true")
         assert dict(load_table(spark, str(tmp_path), "ns").dtypes)["ts"] == "bigint"
-    finally:
-        restore()
-
-
-def test_tables_loaded_before_events_stay_warm(spark, sf_dir, tmp_path):
-    """A table inferred under ``nanosAsLong=false`` fires no job on its
-    next load after the ``events`` load flips the conf to ``true``; one
-    inferred under ``true`` keeps the conf in its signature and is
-    re-inferred when it goes back to ``false``."""
-    for t in ("nation", "region"):
-        shutil.copy(f"{sf_dir}/{t}.parquet", tmp_path / f"{t}.parquet")
-
-    def load(name):
-        return lambda: load_table(spark, str(tmp_path), name)
-
-    restore = _with_nanos(spark, "false")
-    try:
-        _, cold = _jobs(spark, "nanos-cold", load("nation"))
-        assert cold
-        load_table(spark, sf_dir, "events")
-        assert spark.conf.get(catalog._NANOS_CONF) == "true"
-        df, warm = _jobs(spark, "nanos-warm", load("nation"))
-        assert warm == []
-        assert df.count() == 25
-
-        _, cold = _jobs(spark, "nanos-true-cold", load("region"))
-        assert cold
-        spark.conf.set(catalog._NANOS_CONF, "false")
-        _, again = _jobs(spark, "nanos-true-flip", load("region"))
-        assert again, "an entry inferred under true must not serve false"
+        spark.conf.set(_NANOS_CONF, "false")
+        with pytest.raises(AnalysisException, match="PARQUET_TYPE_ILLEGAL"):
+            load_table(spark, str(tmp_path), "ns")
     finally:
         restore()

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import ast
 import os
+import re
 import subprocess
 import sys
 import tempfile
@@ -127,6 +128,26 @@ def test_kerberos_secured_ha_cluster_exact_key_set():
 def test_no_kerberos_keys_without_principal():
     conf = HdfsParams(namenode="nn1:9000").to_spark_conf()
     assert not any("kerberos" in k or "security" in k for k in conf)
+
+
+def test_builder_applies_hdfs_env(monkeypatch):
+    """``session.builder`` reads the HDFS_* variables (no session is
+    started); with none set it adds no ``spark.hadoop.*`` key."""
+    from duckdb_hdfs_spark.session import builder
+
+    for k in (
+        ENV_DEFAULT_NAMENODE,
+        ENV_HA_NAMENODES,
+        ENV_SHORTCIRCUIT,
+        ENV_DOMAIN_SOCKET_PATH,
+        ENV_KERBEROS_PRINCIPAL,
+        ENV_KERBEROS_KEYTAB,
+        ENV_KERBEROS_TICKET_CACHE,
+    ):
+        monkeypatch.delenv(k, raising=False)
+    assert [k for k in builder()._options if k.startswith("spark.hadoop.")] == []
+    monkeypatch.setenv(ENV_DEFAULT_NAMENODE, "nn1:9000")
+    assert builder()._options["spark.hadoop.fs.defaultFS"] == "hdfs://nn1:9000"
 
 
 def test_parse_url():
@@ -586,6 +607,47 @@ def _local_fs_uses(path: Path) -> list[tuple[int, str | None]]:
 
     visit(ast.parse(path.read_text()), None)
     return out
+
+
+@pytest.mark.parametrize(
+    "key, reader", [("fs_read_parquet", "parquet"), ("fs_read_binary", "load")]
+)
+def test_glob_keys_hand_the_reader_literal_paths(
+    spark, sf_dir, monkeypatch, key, reader
+):
+    """A glob-path key expands its pattern through ``HadoopFs.glob``
+    and hands Spark the matched paths: given the pattern, Spark's
+    metadata-directory probe logs a FileNotFoundException warning on
+    every read.  ``fs_read_binary`` reads its oracle's ``read_blob``
+    pattern."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from duckdb_hdfs_spark.queries import load_all
+
+    qd = load_all()[key]
+    pattern = f"{sf_dir}/nati*n.parquet"
+    if key == "fs_read_binary":
+        pattern = re.search(r"read_blob\('([^']+)'\)", qd.oracle).group(1)
+    seen = []
+    real = getattr(DataFrameReader, reader)
+
+    def record(self, *args, **kw):
+        for arg in args:
+            seen.extend([arg] if isinstance(arg, str) else arg)
+        return real(self, *args, **kw)
+
+    monkeypatch.setattr(DataFrameReader, reader, record)
+    want = [fi.path for fi in HadoopFs(spark).glob(pattern)]
+    df = qd.spark(spark, sf_dir)
+    assert want and seen == want
+    assert sorted(f.replace("file:///", "file:/") for f in df.inputFiles()) == want
+
+
+def test_glob_key_with_no_match_raises(spark, tmp_path):
+    from duckdb_hdfs_spark.queries import load_all
+
+    with pytest.raises(FileNotFoundError, match="nati"):
+        load_all()["fs_read_parquet"].spark(spark, str(tmp_path))
 
 
 def test_queries_touch_files_only_through_hadoop_fs():
