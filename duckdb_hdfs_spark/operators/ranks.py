@@ -204,7 +204,9 @@ def range_frame_count_decsum(
     real values — the RANGE-window rule): they take a direct
     per-partition pass (count of the partition's NULL rows; their
     decimal sum is the all-NULL sum, i.e. NULL) exactly as the naive
-    window computes them.
+    window computes them — a grouped aggregate joined back by
+    broadcast on a null-safe key, so a NULL partition key keeps its
+    rows and no window partitions on the bare group key.
 
     The probe fold groups on a row tag the operator assigns before the
     explode (``monotonically_increasing_id``; grouped_cumsum
@@ -222,7 +224,7 @@ def range_frame_count_decsum(
     if not part_cols:
         raise ValueError(
             "range_frame_count_decsum needs partition columns (the "
-            "NULL-peer pass is a partitioned window)"
+            "NULL-peer pass groups on them)"
         )
     v = F.col(value_col)
     dec = v.cast(dec_type)
@@ -295,12 +297,16 @@ def range_frame_count_decsum(
         )
         .select("_row.*", out_n, out_s)
     )
-    wn = Window.partitionBy(*part_cols)
-    nn_out = nn.select(
-        *df.columns,
-        F.count(F.lit(1)).over(wn).alias(out_n),
-        F.sum(dec).over(wn).alias(out_s),
+    peers = nn.groupBy(*part_cols).agg(
+        F.count(F.lit(1)).alias(out_n), F.sum(dec).alias(out_s)
     )
+    peers = peers.select(
+        *[F.col(c).alias(f"__p_{c}") for c in part_cols], out_n, out_s
+    )
+    nn_out = nn.join(
+        F.broadcast(peers),
+        [F.col(f"__p_{c}").eqNullSafe(F.col(c)) for c in part_cols],
+    ).select(*df.columns, out_n, out_s)
     return folded.unionByName(nn_out)
 
 

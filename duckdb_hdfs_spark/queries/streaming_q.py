@@ -9,7 +9,6 @@ computation)."""
 from __future__ import annotations
 
 import itertools
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -19,7 +18,22 @@ from duckdb_hdfs_spark.queries import query
 from duckdb_hdfs_spark.queries.events import sess_ctes
 from duckdb_hdfs_spark.sources.catalog import load_table
 from duckdb_hdfs_spark.sources.fs import HadoopFs, scratch
+from duckdb_hdfs_spark.streaming.pipelines import (
+    clamp_event_time,
+    drain,
+    dropped_by_watermark,
+    interval_join_views_purchases,
+    read_event_stream,
+    replay_clamp_anchor,
+    running_user_totals,
+    session_timeout_sessions,
+    session_windows,
+    windowed_counts,
+)
 
+#: numbers the directories a returned frame reads lazily (CDC and HLL
+#: state, the partitioned sink's output), so a later run of the same
+#: key never rewrites files an earlier run's frame still reads
 _run_counter = itertools.count()
 
 # --------------------------------------------------------------------------
@@ -68,17 +82,12 @@ clamped_events AS (
 
 def _ingest_clamp(df: DataFrame, anchor_src) -> DataFrame:
     """Clamp ``df``'s event time at ingest, anchored to the replay
-    clock derived from ``anchor_src``: either the static read of the
-    same fixture (anchor computed here) or an ALREADY-COMPUTED anchor
+    clock derived from ``anchor_src``: either the catalog's static
+    ``events`` (anchor computed here) or an ALREADY-COMPUTED anchor
     datetime, so multi-input queries (stream-stream joins) derive the
     anchor once instead of re-running the count + top-k jobs per side
     (round-12 advisor).  Pass-through on an empty replay (no anchor
     exists — and nothing to poison)."""
-    from duckdb_hdfs_spark.streaming.pipelines import (
-        clamp_event_time,
-        replay_clamp_anchor,
-    )
-
     anchor = (
         replay_clamp_anchor(anchor_src)
         if isinstance(anchor_src, DataFrame)
@@ -91,19 +100,26 @@ def _ingest_clamp(df: DataFrame, anchor_src) -> DataFrame:
     )
 
 
-def _write_ordered_batches(batches, src: str) -> str:
-    """Write each batch DataFrame as one parquet file under ``src``
-    (the first write replaces whatever ``src`` held) with file mtimes
-    pinned to strictly increasing minutes, so the file source's
-    oldest-first ordering replays EXACTLY this arrival order — the
-    fixture contract every forced-arrival-order streaming query relies
-    on.  One definition, so the four callers' fixtures cannot drift
-    apart."""
+def _stage(batches, tag: str) -> str:
+    """Stage a replay's input at ``scratch("stream_<tag>")``, one
+    path per key, and return the path.  The batch DataFrames are
+    written in arrival order (the first write replaces whatever the
+    path held) with their files' mtimes pinned to strictly increasing
+    minutes, so the file source's oldest-first ordering replays
+    EXACTLY this order.  Several batches are written one file each
+    (forced arrival order); a single batch is written one file per
+    partition, so a round-robin replay of n files passes
+    ``events.repartition(n)``.  Every streaming key stages here, so
+    the replays cannot drift apart.  No returned frame reads the
+    staged files, so a later run may replace them."""
+    src = scratch(f"stream_{tag}")
     fs = HadoopFs(batches[0].sparkSession)
     t0_ms = 1_700_000_000_000
     seen: set[str] = set()
     for i, b in enumerate(batches):
-        b.repartition(1).write.mode("append" if i else "overwrite").parquet(src)
+        if len(batches) > 1:
+            b = b.repartition(1)
+        b.write.mode("append" if i else "overwrite").parquet(src)
         parts = {fi.path for fi in fs.glob(f"{src}/*.parquet")} - seen
         for p in parts:
             fs.set_mtime_ms(p, t0_ms + 60_000 * i)
@@ -120,19 +136,6 @@ def _publish_state(fs: HadoopFs, df: DataFrame, state_dir: str) -> None:
     fs.rm(state_dir, recursive=True)
     if not fs.mv(tmp, state_dir):
         raise OSError(f"could not move {tmp} to {state_dir}")
-
-
-def _rewrite_events(
-    spark: SparkSession, sf_dir: str, n_files: int, tag: str
-) -> str:
-    """Materialize the events table as ``n_files`` parquet files for
-    the file-source stream (multiple files => multiple micro-batches
-    under maxFilesPerTrigger=1, so cross-batch state is actually
-    exercised)."""
-    src = scratch(f"stream_{tag}/{os.path.basename(sf_dir)}")
-    events = load_table(spark, sf_dir, "events").repartition(n_files)
-    events.write.mode("overwrite").parquet(src)
-    return src
 
 
 @query(
@@ -155,21 +158,10 @@ def streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream → 1-day watermarked tumbling windows →
     complete-mode memory sink, drained with availableNow.  The events
     table is staged first as the stream's source directory
-    (:func:`_rewrite_events`, one file here)."""
-    from duckdb_hdfs_spark.streaming.pipelines import (
-        read_event_stream,
-        run_available_now_to_memory,
-        windowed_counts,
-    )
-
-    src = _rewrite_events(spark, sf_dir, n_files=1, tag="src")
-
-    name = f"t_streaming_windowed_counts_{next(_run_counter)}"
+    (:func:`_stage`, one file here)."""
+    src = _stage([load_table(spark, sf_dir, "events").repartition(1)], "windowed")
     stream = read_event_stream(spark, src, max_files_per_trigger=1)
-    run_available_now_to_memory(
-        windowed_counts(stream), name, output_mode="complete"
-    )
-    return spark.table(name)
+    return drain(windowed_counts(stream), "complete")[0]
 
 
 # --------------------------------------------------------------------------
@@ -186,7 +178,7 @@ FROM events GROUP BY event_type
 )
 def streaming_dedup_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming state-store dedup: file-source stream split into 4
-    micro-batches (maxFilesPerTrigger=1 over a 4-file rewrite) →
+    micro-batches (maxFilesPerTrigger=1 over a 4-file replay) →
     ``dropDuplicates`` on (event_type, user_id) → append-mode memory
     sink; the batch tail counts survivors per type.  Duplicates that
     span micro-batches are dropped by the state store, which is the
@@ -196,21 +188,13 @@ def streaming_dedup_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-partitioned across executors by the state store; production
     unbounded streams would add ``dropDuplicatesWithinWatermark`` to
     bound retention (streaming/pipelines.py:dedup_stream)."""
-    from duckdb_hdfs_spark.streaming.pipelines import (
-        read_event_stream,
-        run_available_now_to_memory,
-    )
-
-    src = _rewrite_events(spark, sf_dir, n_files=4, tag="dedup")
-
-    name = f"t_streaming_dedup_users_{next(_run_counter)}"
+    src = _stage([load_table(spark, sf_dir, "events").repartition(4)], "dedup")
     stream = read_event_stream(spark, src, max_files_per_trigger=1)
     deduped = stream.dropDuplicates(["event_type", "user_id"]).select(
         "event_type", "user_id"
     )
-    run_available_now_to_memory(deduped, name, output_mode="append")
     return (
-        spark.table(name)
+        drain(deduped, "append")[0]
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_unique_users"))
     )
@@ -234,7 +218,7 @@ def streaming_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful streaming operator through the driver contract:
     ``applyInPandasWithState`` keeps one (count, sum) pair per user,
     emitting the running totals every micro-batch (update semantics,
-    2 micro-batches over the 4-file rewrite — maxFilesPerTrigger=2;
+    2 micro-batches over the 4-file replay — maxFilesPerTrigger=2;
     state still crosses a batch boundary, which is the property under
     test, while the per-batch fixed machinery — planning, state-store
     commit cycle, Arrow round-trip — is paid half as often; round-13
@@ -254,21 +238,10 @@ def streaming_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     ulp(total) < 1e-4, i.e. |total| < 2^40 ≈ 1e12 — beyond that the
     pandas pairwise sum and DuckDB's sequential sum legitimately
     differ in the 4th decimal."""
-    from duckdb_hdfs_spark.streaming.pipelines import (
-        read_event_stream,
-        run_available_now_to_memory,
-        running_user_totals,
-    )
-
-    src = _rewrite_events(spark, sf_dir, n_files=4, tag="totals")
-
-    name = f"t_streaming_user_totals_{next(_run_counter)}"
+    src = _stage([load_table(spark, sf_dir, "events").repartition(4)], "totals")
     stream = read_event_stream(spark, src, max_files_per_trigger=2)
-    run_available_now_to_memory(
-        running_user_totals(stream), name, output_mode="update"
-    )
-    updates = spark.table(name)
-    final = (
+    updates = drain(running_user_totals(stream), "update")[0]
+    return (
         updates.groupBy("user_id")
         .agg(
             F.max(
@@ -284,7 +257,6 @@ def streaming_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("last.total_value"), 4).alias("total_value"),
         )
     )
-    return final
 
 
 # --------------------------------------------------------------------------
@@ -306,38 +278,30 @@ WHERE v.event_type = 'view' AND p.event_type = 'purchase'
 )
 def streaming_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream attribution: two file-source streams over the
-    same 4-file events rewrite (views / purchases), inner-joined on
+    same 4-file events replay (views / purchases), inner-joined on
     user within a 1-hour event-time horizon, append-mode memory sink.
     A view arriving in micro-batch 1 must sit in the join state store
     until its purchase arrives in batch 2 — the cross-batch buffering
     a batch join never exercises (maxFilesPerTrigger=2 over the
-    4-file rewrite: two batches per side keep the cross-batch
+    4-file replay: two batches per side keep the cross-batch
     buffering property while halving the per-batch fixed machinery —
     two state stores × partitions × commit cycle per batch; round-13
     verdict task #7, pair set batch-count-invariant under availableNow
     + the wide watermark).
 
     The watermark is wider than the table's span for the same reason
-    as ``streaming_session_windows``: the 4-file rewrite makes
+    as ``streaming_session_windows``: the 4-file replay makes
     micro-batches arrive out of event-time order, and the oracle
     needs the no-drop regime.  Production uses the default tight
     watermark so view state is evicted one horizon+delay after its
     event time (see ``interval_join_views_purchases``)."""
-    from duckdb_hdfs_spark.streaming.pipelines import (
-        interval_join_views_purchases,
-        read_event_stream,
-        replay_clamp_anchor,
-        run_available_now_to_memory,
-    )
-
-    src = _rewrite_events(spark, sf_dir, n_files=4, tag="ssjoin")
-
-    name = f"t_streaming_view_purchase_join_{next(_run_counter)}"
+    events = load_table(spark, sf_dir, "events")
+    src = _stage([events.repartition(4)], "ssjoin")
     # both sides run through the replay-anchored ingest clamp BEFORE
     # their watermarks: the global join watermark is the min across
     # inputs, so one poisoned side force-evicts the OTHER side's
     # buffered state (module comment above CLAMP_CTES)
-    anchor = replay_clamp_anchor(spark.read.parquet(src))
+    anchor = replay_clamp_anchor(events)
     views = _ingest_clamp(
         read_event_stream(spark, src, max_files_per_trigger=2).filter(
             F.col("event_type") == "view"
@@ -350,14 +314,10 @@ def streaming_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         anchor,
     )
-    run_available_now_to_memory(
-        interval_join_views_purchases(
-            views, purchases, horizon="1 hour", watermark="60 days"
-        ),
-        name,
-        output_mode="append",
+    joined = interval_join_views_purchases(
+        views, purchases, horizon="1 hour", watermark="60 days"
     )
-    return spark.table(name)
+    return drain(joined, "append")[0]
 
 
 # --------------------------------------------------------------------------
@@ -397,7 +357,7 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     the state store — the cross-batch property the batch twin
     (ev_sessionize) cannot exercise.
 
-    The 4-file rewrite is round-robin, so micro-batches arrive OUT of
+    The 4-file replay is round-robin, so micro-batches arrive OUT of
     event-time order; the watermark is therefore set wider than the
     table's time span — with a production 1-day watermark the first
     batch (which spans the whole month) would advance event time past
@@ -409,15 +369,8 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     across executors; a production watermark closes sessions once event
     time passes last_ts + gap + watermark, so state size tracks ACTIVE
     sessions, not history."""
-    from duckdb_hdfs_spark.streaming.pipelines import (
-        read_event_stream,
-        run_available_now_to_memory,
-        session_windows,
-    )
-
-    src = _rewrite_events(spark, sf_dir, n_files=4, tag="sessions")
-
-    name = f"t_streaming_session_windows_{next(_run_counter)}"
+    events = load_table(spark, sf_dir, "events")
+    src = _stage([events.repartition(4)], "sessions")
     # ingest-time event-time clamp (rounds 11-12): a single corrupted
     # far-future timestamp would advance the watermark past the whole
     # real stream and force-close every live session; the clamp bounds
@@ -427,56 +380,14 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     # identical clamp, so under corruption both engines sessionize the
     # same clamped stream.
     stream = _ingest_clamp(
-        read_event_stream(spark, src, max_files_per_trigger=1),
-        spark.read.parquet(src),
+        read_event_stream(spark, src, max_files_per_trigger=1), events
     )
-    run_available_now_to_memory(
-        session_windows(stream, gap="2 hours", watermark="60 days"),
-        name,
-        output_mode="complete",
-    )
-    return spark.table(name)
+    return drain(
+        session_windows(stream, gap="2 hours", watermark="60 days"), "complete"
+    )[0]
 
 
 # --------------------------------------------------------------------------
-def _rewrite_events_split_late(
-    spark: SparkSession, sf_dir: str, tag: str, late_days: int = 14
-):
-    """Materialize events as THREE parquet files in forced arrival
-    order: the on-time bulk split in two (older half, then recent
-    half), then the ``late_days``-old stragglers — file mtimes are
-    pinned so the file source (oldest-first) replays exactly this
-    order.  THREE on-time-then-late batches, not two, because the
-    late-events filter uses the watermark committed one batch EARLIER
-    than the one a batch's progress row displays (probe-verified:
-    with only two batches the operative late watermark in batch 1 is
-    still the epoch, and nothing drops).  Returns ``src_dir``.
-
-    The replay-anchored ingest clamp applies to the STATIC frame
-    here, before the cutoff/mid anchors are computed and the files
-    are written — this rewrite IS the ingest for this pipeline, and
-    an unclamped far-future row would poison max(ts) and push both
-    split anchors past the entire real stream (empty batch 1 =
-    broken watermark-lag mechanics) before the stream even starts."""
-    ev = load_table(spark, sf_dir, "events")
-    ev = _ingest_clamp(ev, ev)
-    row = ev.agg(
-        F.expr(f"max(ts) - INTERVAL {late_days} DAY").alias("cutoff"),
-        F.expr("max(ts) - INTERVAL 2 DAY").alias("mid"),
-    ).collect()[0]
-    cutoff, mid = row["cutoff"], row["mid"]
-    return _write_ordered_batches(
-        (
-            ev.filter(
-                (F.col("ts") >= F.lit(cutoff)) & (F.col("ts") < F.lit(mid))
-            ),
-            ev.filter(F.col("ts") >= F.lit(mid)),
-            ev.filter(F.col("ts") < F.lit(cutoff)),
-        ),
-        scratch(f"stream_{tag}/{os.path.basename(sf_dir)}"),
-    )
-
-
 @query(
     "streaming_late_event_drops",
     # the late file arrives after TWO on-time batches have advanced
@@ -521,31 +432,45 @@ def streaming_late_event_drops(spark: SparkSession, sf_dir: str) -> DataFrame:
     admits late rows into fresh state (no input filtering — only
     eviction), while deduplication filters input by the late-events
     watermark, which is the watermark committed one batch before the
-    one the progress row displays — hence the 3-batch replay.
+    one the progress row displays — hence the 3-batch replay: the
+    on-time bulk split in two (older half, then the last 2 days),
+    then the stragglers.  With only two batches the operative late
+    watermark in batch 1 is still the epoch, and nothing drops
+    (probe-verified).
+
+    The replay-anchored ingest clamp applies to the catalog's STATIC
+    frame before the cutoff/mid split points are computed and the
+    files are written — this staging IS the ingest for this pipeline,
+    and an unclamped far-future row would poison max(ts) and push both
+    split points past the entire real stream (empty batch 1 = broken
+    watermark-lag mechanics) before the stream even starts.
 
     Scale note: this is the metrics panel a production ingest
     watches; at 100 TB/day the equivalent is the listener feed — no
     extra scan."""
-    from duckdb_hdfs_spark.streaming.pipelines import (
-        dropped_by_watermark,
-        read_event_stream,
-        run_available_now_to_memory,
+    ev = load_table(spark, sf_dir, "events")
+    ev = _ingest_clamp(ev, ev)
+    cutoff, mid = ev.agg(
+        F.expr("max(ts) - INTERVAL 14 DAY"), F.expr("max(ts) - INTERVAL 2 DAY")
+    ).first()
+    src = _stage(
+        [
+            ev.filter((F.col("ts") >= F.lit(cutoff)) & (F.col("ts") < F.lit(mid))),
+            ev.filter(F.col("ts") >= F.lit(mid)),
+            ev.filter(F.col("ts") < F.lit(cutoff)),
+        ],
+        "latedrop",
     )
-
-    src = _rewrite_events_split_late(spark, sf_dir, tag="latedrop")
-
-    name = f"t_streaming_late_event_drops_{next(_run_counter)}"
     stream = read_event_stream(spark, src, max_files_per_trigger=1)
     deduped = (
         stream.withWatermark("ts", "1 day")
         .dropDuplicates(["event_id", "ts"])
         .select("event_id", "event_type")
     )
-    progress = run_available_now_to_memory(deduped, name, output_mode="append")
+    kept, progress = drain(deduped, "append")
     dropped = dropped_by_watermark(progress)
     return (
-        spark.table(name)
-        .groupBy("event_type")
+        kept.groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("kept_events"),
             F.lit(dropped).cast("bigint").alias("dropped_observed"),
@@ -575,16 +500,10 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB/day of events the dimension is the small side, re-read
     per micro-batch and broadcast to every task; no state store is
     involved because stream-static joins are stateless."""
-    from duckdb_hdfs_spark.streaming.pipelines import (
-        read_event_stream,
-        run_available_now_to_memory,
-    )
-
-    src = _rewrite_events(spark, sf_dir, n_files=2, tag="enrich")
+    src = _stage([load_table(spark, sf_dir, "events").repartition(2)], "enrich")
     customers = F.broadcast(
         load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     )
-    name = f"t_streaming_static_enrich_{next(_run_counter)}"
     enriched = (
         read_event_stream(spark, src, max_files_per_trigger=1)
         .join(customers, F.col("user_id") == F.col("c_custkey"))
@@ -596,8 +515,7 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("sum_value"),
         )
     )
-    run_available_now_to_memory(enriched, name, output_mode="complete")
-    return spark.table(name)
+    return drain(enriched, "complete")[0]
 
 
 # --------------------------------------------------------------------------
@@ -648,8 +566,6 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructType,
     )
 
-    from duckdb_hdfs_spark.streaming.pipelines import run_available_now_apply
-
     log_schema = StructType(
         [
             StructField("o_orderkey", LongType()),
@@ -659,41 +575,40 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("pri", IntegerType()),
         ]
     )
-    run_id = next(_run_counter)
-    src = scratch(f"stream_cdc_{run_id}/{os.path.basename(sf_dir)}")
     ods = load_table(spark, sf_dir, "orders")
-    batches = (
-        ods.select(
-            "o_orderkey",
-            F.col("o_orderstatus").alias("st"),
-            F.col("o_totalprice").alias("price"),
-            F.lit("I").alias("op"),
-            F.lit(0).alias("pri"),
-        ),
-        ods.filter(F.col("o_orderkey") % 4 == 0).select(
-            "o_orderkey",
-            F.lit("U").alias("st"),
-            (F.col("o_totalprice") + F.lit(10.0)).alias("price"),
-            F.lit("U").alias("op"),
-            F.lit(1).alias("pri"),
-        ),
-        ods.filter(F.col("o_orderkey") % 7 == 0).select(
-            "o_orderkey",
-            F.lit(None).cast("string").alias("st"),
-            F.lit(None).cast("double").alias("price"),
-            F.lit("D").alias("op"),
-            F.lit(2).alias("pri"),
-        ),
+    src = _stage(
+        [
+            ods.select(
+                "o_orderkey",
+                F.col("o_orderstatus").alias("st"),
+                F.col("o_totalprice").alias("price"),
+                F.lit("I").alias("op"),
+                F.lit(0).alias("pri"),
+            ),
+            ods.filter(F.col("o_orderkey") % 4 == 0).select(
+                "o_orderkey",
+                F.lit("U").alias("st"),
+                (F.col("o_totalprice") + F.lit(10.0)).alias("price"),
+                F.lit("U").alias("op"),
+                F.lit(1).alias("pri"),
+            ),
+            ods.filter(F.col("o_orderkey") % 7 == 0).select(
+                "o_orderkey",
+                F.lit(None).cast("string").alias("st"),
+                F.lit(None).cast("double").alias("price"),
+                F.lit("D").alias("op"),
+                F.lit(2).alias("pri"),
+            ),
+        ],
+        "cdc",
     )
-    _write_ordered_batches(batches, src)
-
     fs = HadoopFs(spark)
-    state_dir = scratch(f"cdc_state_{run_id}")
+    state_dir = scratch(f"cdc_state_{next(_run_counter)}")
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
         if fs.exists(state_dir):
-            state = s.read.parquet(state_dir)
+            state = s.read.schema(log_schema).parquet(state_dir)
         else:
             state = local_frame(s, [], log_schema)
         merged = (
@@ -713,9 +628,10 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    run_available_now_apply(stream, apply_batch)
+    drain(stream, "update", lambda w: w.foreachBatch(apply_batch))
     return (
-        spark.read.parquet(state_dir)
+        spark.read.schema(log_schema)
+        .parquet(state_dir)
         .filter(F.col("op") != "D")
         .groupBy(F.col("st").alias("status"))
         .agg(
@@ -761,13 +677,7 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: sliding windows multiply state by window/slide (here 2×),
     not by data volume; the aggregation partial-aggregates per pane
     exactly like the tumbling case."""
-    from duckdb_hdfs_spark.streaming.pipelines import (
-        read_event_stream,
-        run_available_now_to_memory,
-    )
-
-    src = _rewrite_events(spark, sf_dir, n_files=2, tag="slide")
-    name = f"t_streaming_sliding_counts_{next(_run_counter)}"
+    src = _stage([load_table(spark, sf_dir, "events").repartition(2)], "slide")
     stream = read_event_stream(spark, src, max_files_per_trigger=1)
     agg = (
         stream.withWatermark("ts", "1 day")
@@ -788,8 +698,7 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    run_available_now_to_memory(agg, name, output_mode="complete")
-    return spark.table(name)
+    return drain(agg, "complete")[0]
 
 
 # --------------------------------------------------------------------------
@@ -818,15 +727,10 @@ def streaming_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-batch work is one partial-aggregated sketch pass over
     the batch plus a 5-row state union; state size is types ×
     sketch-bytes, constant in data volume."""
-    from duckdb_hdfs_spark.streaming.pipelines import (
-        read_event_stream,
-        run_available_now_apply,
-    )
-
-    run_id = next(_run_counter)
-    src = _rewrite_events(spark, sf_dir, n_files=3, tag=f"hll_{run_id}")
+    src = _stage([load_table(spark, sf_dir, "events").repartition(3)], "hll")
     fs = HadoopFs(spark)
-    state_dir = scratch(f"hll_state_{run_id}")
+    state_dir = scratch(f"hll_state_{next(_run_counter)}")
+    state_schema = "event_type string, sk binary"
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
@@ -834,7 +738,7 @@ def streaming_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.hll_sketch_agg("user_id").alias("sk")
         )
         if fs.exists(state_dir):
-            state = s.read.parquet(state_dir)
+            state = s.read.schema(state_schema).parquet(state_dir)
             merged = (
                 state.unionByName(partial)
                 .groupBy("event_type")
@@ -845,14 +749,15 @@ def streaming_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         _publish_state(fs, merged, state_dir)
 
     stream = read_event_stream(spark, src, max_files_per_trigger=1)
-    run_available_now_apply(stream, apply_batch, output_mode="append")
+    drain(stream, "append", lambda w: w.foreachBatch(apply_batch))
     exact = (
         load_table(spark, sf_dir, "events")
         .groupBy("event_type")
         .agg(F.count_distinct("user_id").alias("n_exact"))
     )
     return (
-        spark.read.parquet(state_dir)
+        spark.read.schema(state_schema)
+        .parquet(state_dir)
         .join(exact, "event_type")
         .select(
             "event_type",
@@ -906,7 +811,7 @@ def streaming_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     but only after the watermark proves no match can arrive; this is
     the state-EVICTION semantics the inner join never exercises
     (an unmatched row's emission is triggered by watermark progress,
-    not by data).  The events rewrite is split into two files in
+    not by data).  The events replay is split into two files in
     EVENT-TIME order (arrival order == event time), so the tight
     1-minute watermark drops nothing, advances past batch 1's views
     during batch 2, and the availableNow drain's final no-data batch
@@ -917,15 +822,14 @@ def streaming_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: both streams shuffle on user_id once; view state is
     bounded by horizon+delay of event-time, independent of history."""
-    run_id = next(_run_counter)
-    base = _rewrite_events(spark, sf_dir, n_files=1, tag=f"louter_{run_id}")
-    # replay-anchored ingest clamp on the STATIC frame, before the
-    # split/cutoff anchors are computed and the event-time-ordered
-    # files are written (this rewrite is the ingest): one far-future
-    # row on EITHER side would otherwise poison that side's watermark
-    # and force-evict the other side's buffered views at micro-batch-
-    # boundary-defined points (module comment above CLAMP_CTES)
-    ev_static = spark.read.parquet(base)
+    # replay-anchored ingest clamp on the catalog's STATIC frame,
+    # before the split/cutoff anchors are computed and the
+    # event-time-ordered files are written (this staging is the
+    # ingest): one far-future row on EITHER side would otherwise poison
+    # that side's watermark and force-evict the other side's buffered
+    # views at micro-batch-boundary-defined points (module comment
+    # above CLAMP_CTES)
+    ev_static = load_table(spark, sf_dir, "events")
     ev_static = _ingest_clamp(ev_static, ev_static)
     # the final global watermark is the MIN of the two sides' (max
     # event time − delay); each side's max is per-TYPE, not the
@@ -963,19 +867,13 @@ def streaming_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     mx = min(mxv, mxp)
-    src = _write_ordered_batches(
-        (
+    src = _stage(
+        [
             ev_static.filter(F.col("ts") <= F.lit(mid)),
             ev_static.filter(F.col("ts") > F.lit(mid)),
-        ),
-        scratch(f"stream_louter_split_{run_id}"),
+        ],
+        "louter",
     )
-
-    from duckdb_hdfs_spark.streaming.pipelines import (
-        read_event_stream,
-        run_available_now_to_memory,
-    )
-
     # the cutoff must NOT filter the stream itself: the views-side
     # watermark tracks the max event time flowing through its node,
     # and the global join watermark is the MIN of both sides — a
@@ -1016,37 +914,10 @@ def streaming_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "unmatched"
         ),
     )
-    name = f"t_streaming_left_outer_join_{run_id}"
-    run_available_now_to_memory(joined, name, output_mode="append")
-    return spark.table(name).filter(F.col("view_ts") <= cutoff)
+    return drain(joined, "append")[0].filter(F.col("view_ts") <= cutoff)
 
 
 # --------------------------------------------------------------------------
-def _rewrite_events_time_ordered(
-    spark: SparkSession, sf_dir: str, tag: str
-) -> str:
-    """Two-file events rewrite SPLIT BY EVENT TIME with arrival order
-    matching (mtimes ordered) — for tight-watermark pipelines where
-    out-of-order arrival would drop rows.
-
-    The replay-anchored ingest clamp applies to the STATIC frame
-    before the median split point is computed and the files are
-    written (this rewrite is the ingest): an unclamped far-future row
-    would land in file 2 and advance the tight watermark past every
-    real row's decision point at an arrival-defined instant."""
-    base = _rewrite_events(spark, sf_dir, n_files=1, tag=f"{tag}_base")
-    ev_static = spark.read.parquet(base)
-    ev_static = _ingest_clamp(ev_static, ev_static)
-    (mid,) = ev_static.agg(F.percentile_approx("ts", 0.5)).first()
-    return _write_ordered_batches(
-        (
-            ev_static.filter(F.col("ts") <= F.lit(mid)),
-            ev_static.filter(F.col("ts") > F.lit(mid)),
-        ),
-        scratch(f"stream_{tag}_split"),
-    )
-
-
 @query(
     "streaming_session_timeout",
     # the custom sessionizer closes sessions two ways: a later event
@@ -1082,27 +953,27 @@ def streaming_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: state is one (start, last, n) triple per ACTIVE user;
     timeout processing touches only fired timers."""
-    from duckdb_hdfs_spark.streaming.pipelines import (
-        read_event_stream,
-        run_available_now_to_memory,
-        session_timeout_sessions,
+    # replay-anchored ingest clamp on the catalog's STATIC frame,
+    # before the median split point and the cutoff are computed and
+    # the files are written (this staging is the ingest): an unclamped
+    # far-future row would land in file 2 and advance the tight
+    # watermark past every real row's decision point at an
+    # arrival-defined instant
+    ev = load_table(spark, sf_dir, "events")
+    ev = _ingest_clamp(ev, ev)
+    mid, mx = ev.agg(F.percentile_approx("ts", 0.5), F.max("ts")).first()
+    src = _stage(
+        [ev.filter(F.col("ts") <= F.lit(mid)), ev.filter(F.col("ts") > F.lit(mid))],
+        "sesto",
     )
-
-    run_id = next(_run_counter)
-    src = _rewrite_events_time_ordered(spark, sf_dir, tag=f"sesto_{run_id}")
-    (mx,) = spark.read.parquet(src).agg(F.max("ts")).first()
     stream = read_event_stream(spark, src, max_files_per_trigger=1)
-    name = f"t_streaming_session_timeout_{run_id}"
-    run_available_now_to_memory(
-        session_timeout_sessions(stream), name, output_mode="append"
-    )
+    sessions = drain(session_timeout_sessions(stream), "append")[0]
     # cast pins the type when mx is None (EMPTY stream, zero-row
     # audit r10): an untyped NULL literal fails analysis against the
     # interval arithmetic; a typed NULL cutoff filters to empty
     cutoff = F.lit(mx).cast("timestamp") - F.expr("INTERVAL 32 MINUTE")
     return (
-        spark.table(name)
-        .select(
+        sessions.select(
             "user_id",
             F.timestamp_micros(F.col("start_us")).alias("session_start"),
             F.timestamp_micros(F.col("end_us")).alias("session_end"),
@@ -1136,26 +1007,14 @@ def streaming_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each micro-batch appends only its own files per partition;
     the sink never rewrites history.  (Production compacts small
     files periodically — fs_compact_small_files.)"""
-    run_id = next(_run_counter)
-    src = _rewrite_events(spark, sf_dir, n_files=3, tag=f"psink_{run_id}")
-    out = scratch(f"psink_out_{run_id}")
-    ckpt = scratch(f"psink_ckpt_{run_id}")
-    from duckdb_hdfs_spark.streaming.pipelines import read_event_stream
-
+    src = _stage([load_table(spark, sf_dir, "events").repartition(3)], "psink")
+    out = scratch(f"psink_out_{next(_run_counter)}")
     stream = read_event_stream(spark, src, max_files_per_trigger=1)
-    q = (
-        stream.select("event_id", "ts", "user_id", "event_type", "value")
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .partitionBy("event_type")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream.select("event_id", "ts", "user_id", "event_type", "value"),
+        "append",
+        lambda w: w.format("parquet").option("path", out).partitionBy("event_type"),
     )
-    from duckdb_hdfs_spark.streaming.pipelines import drain
-
-    drain(q, 120, "partitioned sink")
     # explicit schema: an EMPTY stream drains zero partition dirs and
     # inference would fail on the bare sink metadata (zero-row audit,
     # round 10 — the fs_write_parquet read-back rule)
@@ -1205,13 +1064,7 @@ def streaming_complete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: complete mode re-emits the whole aggregate per batch —
     viable precisely because the result is top-k-bounded; the
     underlying aggregate state stays one decimal pair per user."""
-    from duckdb_hdfs_spark.streaming.pipelines import (
-        read_event_stream,
-        run_available_now_to_memory,
-    )
-
-    run_id = next(_run_counter)
-    src = _rewrite_events(spark, sf_dir, n_files=3, tag=f"topk_{run_id}")
+    src = _stage([load_table(spark, sf_dir, "events").repartition(3)], "topk")
     stream = read_event_stream(spark, src, max_files_per_trigger=1)
     # the EXACT decimal total rides through the sink so the final rank
     # orders on it like the oracle's ORDER BY sum(decimal) — ranking
@@ -1223,8 +1076,7 @@ def streaming_complete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("dec_total"), F.asc("user_id"))
         .limit(3)
     )
-    name = f"t_streaming_complete_topk_{run_id}"
-    run_available_now_to_memory(agg, name, output_mode="complete")
+    top = drain(agg, "complete")[0]
     from pyspark.sql import Window
 
     # rank the <=3-row memory-sink result: the constant partition key
@@ -1235,8 +1087,7 @@ def streaming_complete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.desc("dec_total"), F.asc("user_id")
     )
     return (
-        spark.table(name)
-        .withColumn("rk", F.row_number().over(w))
+        top.withColumn("rk", F.row_number().over(w))
         .select(
             "user_id",
             F.round("dec_total", 2).cast("double").alias("total_value"),

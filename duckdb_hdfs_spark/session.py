@@ -41,6 +41,10 @@ def builder(app_name: str = "duckdb-hdfs-spark", cpus: str | int | None = None):
     apply (master is supplied externally) — nothing here assumes
     single-node execution.
     """
+    # imported here: sources.fs's package imports the catalog, which
+    # reads TIMESTAMP_PARITY_CONFS from this module
+    from duckdb_hdfs_spark.sources.fs import scratch
+
     cpus = str(cpus or DEFAULT_CPUS)
     b = (
         SparkSession.builder.appName(app_name)
@@ -78,6 +82,10 @@ def builder(app_name: str = "duckdb-hdfs-spark", cpus: str | int | None = None):
         .config("spark.sql.streaming.numRecentProgressUpdates", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # the first catalog access (listTables as much as saveAsTable)
+        # creates the default database's directory here; the default,
+        # ./spark-warehouse, would land in the working directory
+        .config("spark.sql.warehouse.dir", scratch("warehouse"))
         .config("spark.ui.showConsoleProgress", "false")
     )
     # the reference's HDFS_* connection variables (conf.HdfsParams);

@@ -14,7 +14,9 @@ the join key with compatible bucket counts.  Each table's files live
 at ``scratch("warehouse/<table>")``, under the per-process scratch
 root, not in the working directory's ``spark-warehouse``: an
 overwrite replaces them, and no earlier process's leftover location
-can block the write.
+can block the write.  A ``get_spark()`` session's warehouse is
+``scratch("warehouse")`` itself; the explicit path keeps a session
+built elsewhere, with the default warehouse, writing there too.
 """
 
 from __future__ import annotations

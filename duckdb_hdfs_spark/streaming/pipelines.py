@@ -18,11 +18,18 @@ Scale design (100 TB / continuous ingest):
 - ``availableNow`` trigger for tests and backfills: processes the
   current file set incrementally (respecting ``maxFilesPerTrigger``)
   then stops — identical code path to a live continuous run.
+
+Every availableNow query the package runs starts and drains in one
+place, :func:`drain`: memory sink, ``foreachBatch`` and file sink
+alike.  Its checkpoint lives under the per-process scratch root
+(``sources.fs.scratch``) and is removed once the drain succeeds; a
+memory sink's temp view is dropped as soon as the returned frame is
+analyzed, so repeated runs leave no view and no directory behind.
 """
 
 from __future__ import annotations
 
-import contextlib
+import itertools
 from collections.abc import Iterable
 
 import pandas as pd
@@ -38,6 +45,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from duckdb_hdfs_spark.sources.fs import HadoopFs, scratch
+
 #: events table schema (TESTDATA.md) — explicit so the stream never
 #: pays an inference scan and schema drift fails loudly.
 EVENTS_SCHEMA = StructType(
@@ -50,27 +59,6 @@ EVENTS_SCHEMA = StructType(
         StructField("props", StringType()),
     ]
 )
-
-
-DOCS_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("text", StringType()),
-        StructField("lang", StringType()),
-        StructField("source", StringType()),
-        StructField("n_chars", LongType()),
-    ]
-)
-
-
-def read_document_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """Parquet file-source stream of the documents table."""
-    reader = spark.readStream.schema(DOCS_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
 
 
 def read_event_stream(
@@ -345,46 +333,33 @@ def replay_clamp_anchor(events: DataFrame, ts_col: str = "ts"):
     )
 
 
-def drain(q, timeout_s: int, what: str = "streaming query") -> None:
-    """Shared availableNow drain guard (round-7 review: previously
-    copied at every start() site): await, and if the trigger hangs
-    past the timeout, stop the query and raise."""
-    q.awaitTermination(timeout_s)
-    if q.isActive:  # pragma: no cover - guard against hung trigger
-        q.stop()
-        raise TimeoutError(f"{what} did not finish in {timeout_s}s")
-
-
-#: state-partition count for every drain — see
-#: run_available_now_to_memory's docstring
+#: state-partition count for every drain — see :func:`drain`
 _DRAIN_STATE_PARTITIONS = "8"
+_DRAIN_TIMEOUT_S = 180
+_drains = itertools.count()
 
 
-@contextlib.contextmanager
-def _state_partitions(spark: SparkSession):
-    """Scope ``spark.sql.shuffle.partitions`` to a drain's .start()
-    call (state-partition sizing — see run_available_now_to_memory's
-    docstring); restores the session value on exit.  Mutating the
-    session-global conf is only safe because these drains run
-    single-threaded per session: nothing else plans a query between
-    set and restore (streaming clones the session at start, so the
-    running drain keeps its value after restore)."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _DRAIN_STATE_PARTITIONS)
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+def drain(
+    df: DataFrame, output_mode: str, sink=None
+) -> tuple[DataFrame | None, list]:
+    """Start ``df`` with an availableNow trigger and drain it.
 
+    ``sink`` configures the ``DataStreamWriter`` of a ``foreachBatch``
+    or file sink; without one the rows drain into a memory sink and
+    the drained frame comes back.  Returns ``(frame, progress)``:
+    ``frame`` is None for a caller's sink, and ``progress`` is the
+    query's progress records (one dict per micro-batch), so callers
+    can audit runtime metrics — e.g.
+    ``stateOperators[].numRowsDroppedByWatermark`` for late-data
+    accounting.
 
-def run_available_now_to_memory(
-    df: DataFrame, name: str, output_mode: str = "append"
-) -> list:
-    """Drain the current input with an availableNow trigger into an
-    in-memory table ``name`` (tests/backfills).  Returns the query's
-    progress records (one dict per micro-batch) so callers can audit
-    runtime metrics — e.g. ``stateOperators[].numRowsDroppedByWatermark``
-    for late-data accounting.
+    Nothing outlives the drain but its output.  The checkpoint lives
+    under the scratch root and is removed once the drain succeeds (a
+    failed drain's stays there until the process exits).  The memory
+    sink's temp view is dropped once the returned frame is analyzed:
+    the frame keeps the sink's rows and still collects them, while the
+    session's catalog holds nothing, so a repeated run never collides
+    with or pins an earlier run's rows.
 
     State-partition sizing: a stateful query locks its state-store
     partition count from ``spark.sql.shuffle.partitions`` at its first
@@ -397,9 +372,9 @@ def run_available_now_to_memory(
     the two-state-store stream-stream join fell 28s → 8s warm, results
     identical).  The session conf is restored right after start —
     streaming isolates itself by cloning the session there, so the
-    running drain keeps its value.  Production sizes state partitions
-    the same way: to the stream's key cardinality and cluster,
-    independent of the batch-shuffle default.  Results are
+    running drain keeps its value.  Mutating the session-global conf
+    is only safe because drains run single-threaded per session:
+    nothing else plans a query between set and restore.  Results are
     partition-count-independent (pinned by the oracle and the
     shuffle.partitions=7 sweep probes).
 
@@ -407,18 +382,38 @@ def run_available_now_to_memory(
     ``spark.sql.streaming.numRecentProgressUpdates`` — sessions from
     get_spark() raise it to 10,000 (session.py) because the 100-entry
     default silently evicts early micro-batches on long one-file-per-
-    trigger drains, undercounting the audit (round-7 review)."""
+    trigger drains, undercounting the audit (round-7 review).  A
+    trigger that hangs past the timeout stops the query and raises."""
     spark = df.sparkSession
-    with _state_partitions(spark):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-    drain(q, 120, f"streaming query {name}")
-    return list(q.recentProgress)
+    n = next(_drains)
+    view = f"t_drain_{n}"
+    ckpt = scratch(f"drain_ckpt_{n}")
+    writer = (
+        df.writeStream.outputMode(output_mode)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+    )
+    if sink is None:
+        writer = writer.format("memory").queryName(view)
+    else:
+        writer = sink(writer)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", _DRAIN_STATE_PARTITIONS)
+    try:
+        q = writer.start()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    q.awaitTermination(_DRAIN_TIMEOUT_S)
+    if q.isActive:  # pragma: no cover - guard against hung trigger
+        q.stop()
+        raise TimeoutError(f"drain {n} did not finish in {_DRAIN_TIMEOUT_S}s")
+    HadoopFs(spark).rm(ckpt, recursive=True)
+    progress = list(q.recentProgress)
+    if sink is not None:
+        return None, progress
+    frame = spark.table(view)
+    spark.catalog.dropTempView(view)
+    return frame, progress
 
 
 def dropped_by_watermark(progress: list) -> int:
@@ -429,35 +424,6 @@ def dropped_by_watermark(progress: list) -> int:
         for p in progress
         for op in (p.get("stateOperators") or [])
     )
-
-
-def run_available_now_apply(df: DataFrame, fn, output_mode: str = "update") -> None:
-    """Drain with availableNow through a caller-supplied foreachBatch
-    function (idempotent sinks: CDC apply, MERGE publishing), with the
-    same drain-proportionate state sizing as
-    :func:`run_available_now_to_memory` (see its docstring)."""
-    spark = df.sparkSession
-    with _state_partitions(spark):
-        q = (
-            df.writeStream.foreachBatch(fn)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-    drain(q, 180, "streaming apply")
-
-
-def run_available_now_foreach_batch(df: DataFrame, collect_into: list) -> None:
-    """Drain with availableNow in update mode, appending each
-    micro-batch's rows (as Row list, tagged with batch_id) into
-    ``collect_into`` — a thin sink over :func:`run_available_now_apply`
-    (round-7 review: the drain/guard block was previously copied
-    verbatim)."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        collect_into.append((batch_id, batch_df.collect()))
-
-    run_available_now_apply(df, sink)
 
 
 SESSION_OUT_SCHEMA = StructType(

@@ -87,20 +87,24 @@ def test_cobucketed_join_matches_unbucketed(spark, sf_dir, bucketed_tables):
 
 def test_bucketed_join_key_writes_under_scratch(spark, sf_dir):
     """``fs_bucketed_join`` keeps its tables under the per-process
-    scratch root: it runs twice in one process with the same rows and
-    leaves nothing new in ``spark.sql.warehouse.dir``."""
+    scratch root: it runs twice in one process with the same rows, its
+    tables live in the session's warehouse (``scratch("warehouse")``
+    for sessions from ``get_spark``), and the second run adds nothing
+    there."""
     from duckdb_hdfs_spark.queries import load_all
 
     warehouse = Path(urlparse(spark.conf.get("spark.sql.warehouse.dir")).path)
+    assert warehouse == Path(scratch("warehouse"))
 
-    def below() -> list[str]:
-        return sorted(map(str, warehouse.rglob("*")))
+    def tables() -> list[str]:
+        return sorted(p.name for p in warehouse.iterdir())
 
-    before = below()
     run = load_all()["fs_bucketed_join"].spark
     first = sorted(map(tuple, run(spark, sf_dir).collect()))
+    after_first = tables()
+    assert {"fsq_bucketed_lineitem", "fsq_bucketed_orders"} <= set(after_first)
     assert first and sorted(map(tuple, run(spark, sf_dir).collect())) == first
-    assert below() == before
+    assert tables() == after_first
     location = spark.sql("DESCRIBE TABLE EXTENDED fsq_bucketed_orders").filter(
         "col_name = 'Location'"
     ).first()["data_type"]

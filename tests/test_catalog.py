@@ -188,3 +188,39 @@ def test_entry_inferred_under_user_nanos_true_is_reinferred(spark, tmp_path):
             load_table(spark, str(tmp_path), "ns")
     finally:
         restore()
+
+
+def test_ntz_column_loads_as_wall_clock_timestamp(spark, tmp_path):
+    """A Spark-written ``TIMESTAMP_NTZ`` column still infers as NTZ,
+    so ``load_table`` casts it to ``timestamp`` under a UTC timezone:
+    the wall-clock values written come back unchanged, and a session
+    running in another timezone gets that timezone back."""
+    import datetime
+
+    from pyspark.sql import functions as F
+
+    tz_conf = "spark.sql.session.timeZone"
+    # 02:30 on 2024-03-10 does not exist in New York (DST gap), so a
+    # cast under the session's timezone would shift it
+    wall = [
+        datetime.datetime(2024, 3, 10, 2, 30),
+        datetime.datetime(1999, 12, 31, 23, 59, 59),
+    ]
+    spark.createDataFrame([(w,) for w in wall], "ts timestamp_ntz").write.parquet(
+        str(tmp_path / "ntz.parquet")
+    )
+    spark.conf.set(tz_conf, "America/New_York")
+    try:
+        df = load_table(spark, str(tmp_path), "ntz")
+        assert spark.conf.get(tz_conf) == "America/New_York"
+        assert dict(df.dtypes) == {"ts": "timestamp"}
+        # epoch micros of the written wall clock read as UTC: no
+        # timezone of the session can shift them
+        got = sorted(r[0] for r in df.select(F.unix_micros("ts")).collect())
+        utc = datetime.timezone.utc
+        want = sorted(
+            int(w.replace(tzinfo=utc).timestamp()) * 1_000_000 for w in wall
+        )
+        assert got == want
+    finally:
+        spark.conf.set(tz_conf, "UTC")

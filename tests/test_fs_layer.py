@@ -609,6 +609,33 @@ def _local_fs_uses(path: Path) -> list[tuple[int, str | None]]:
     return out
 
 
+def _stream_starts(path: Path) -> list[tuple[int, str | None]]:
+    """(line, enclosing function) of every ``writeStream``,
+    ``.start(`` and ``awaitTermination`` in ``path``."""
+    out = []
+
+    def visit(node, func):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, child.name)
+                continue
+            if isinstance(child, ast.Attribute) and child.attr in (
+                "writeStream",
+                "awaitTermination",
+            ):
+                out.append((child.lineno, func))
+            elif (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr == "start"
+            ):
+                out.append((child.lineno, func))
+            visit(child, func)
+
+    visit(ast.parse(path.read_text()), None)
+    return out
+
+
 @pytest.mark.parametrize(
     "key, reader", [("fs_read_parquet", "parquet"), ("fs_read_binary", "load")]
 )
@@ -666,6 +693,25 @@ def test_queries_touch_files_only_through_hadoop_fs():
     assert _local_fs_uses(root_module) != []
 
 
+def test_streams_start_only_in_the_drain():
+    """Every streaming query in the package starts and is awaited in
+    ``streaming.pipelines.drain``, which puts its checkpoint under the
+    scratch root and removes it after the drain: no other module or
+    function touches ``writeStream``, ``.start(`` or
+    ``awaitTermination``."""
+    pipelines = PACKAGE / "streaming" / "pipelines.py"
+    offenders = [
+        f"{p.relative_to(REPO)}:{line}"
+        for p in sorted(PACKAGE.rglob("*.py"))
+        for line, func in _stream_starts(p)
+        if not (p == pipelines and func == "drain")
+    ]
+    assert offenders == [], "start streams through pipelines.drain: " + ", ".join(
+        offenders
+    )
+    assert {f for _, f in _stream_starts(pipelines)} == {"drain"}
+
+
 def test_streaming_scratch_is_removed_at_exit(sf_dir):
     """A process that runs the state-publishing streaming queries
     leaves nothing in the temp directory once it exits, and importing
@@ -689,7 +735,7 @@ def test_streaming_scratch_is_removed_at_exit(sf_dir):
         for key in ("streaming_cdc_apply", "streaming_hll_rollup"):
             assert reg[key].spark(spark, {sf_dir!r}).count() > 0
         assert sorted(os.listdir(_SCRATCH)) == [
-            "cdc_state_0", "hll_state_1", "stream_cdc_0", "stream_hll_1"
+            "cdc_state_0", "hll_state_1", "stream_cdc", "stream_hll"
         ]
         stop_spark()
         print(_SCRATCH)
@@ -714,3 +760,40 @@ def test_streaming_scratch_is_removed_at_exit(sf_dir):
     assert not os.path.exists(root)
     after = {n for n in os.listdir(tmp) if n.startswith("spark_graft_")}
     assert after <= before, sorted(after - before)
+
+
+def test_session_leaves_the_working_directory_empty(tmp_path):
+    """A ``get_spark()`` session keeps its warehouse under the scratch
+    root: listing tables (the first catalog access) and writing a
+    bucketed table create nothing in the working directory, where
+    Spark's default ``spark-warehouse`` would land."""
+    script = textwrap.dedent(
+        """
+        from duckdb_hdfs_spark import get_spark, stop_spark
+        from duckdb_hdfs_spark.sources.bucketing import write_bucketed
+        from duckdb_hdfs_spark.sources.fs import scratch
+
+        spark = get_spark("warehouse")
+        spark.catalog.listTables()
+        write_bucketed(spark.range(10), "wh_probe", ["id"], n_buckets=2)
+        assert spark.table("wh_probe").count() == 10
+        assert spark.conf.get("spark.sql.warehouse.dir").endswith(scratch("warehouse"))
+        stop_spark()
+        """
+    )
+    env = dict(
+        os.environ,
+        PYTHONPATH=str(REPO),
+        SPARK_GRAFT_CPUS="2",
+        SPARK_GRAFT_DRIVER_MEM="1g",
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert os.listdir(tmp_path) == []

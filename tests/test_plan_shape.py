@@ -825,16 +825,18 @@ def test_pq_encoding_is_map_side(spark, sf_dir):
 
 # --------------------------------------------------------------------------
 def test_value_range_frame_window_is_bucketed(spark, sf_dir):
-    """win_value_range_frame's real-data cumulative pass must window
-    on the RANGE BUCKET as well as event_type — a bare event_type
-    window spec over the data stream would re-introduce the
-    type-cardinality parallelism cap (round 7's halo `_vbkt` pin,
-    re-targeted at round 14's cumulative decomposition: the carrier
-    cumulants `_c`/`_s`/`_d` must aggregate under a `__bkt`-partitioned
-    window).  The NULL-peer pass (a window over only the NULL-value
-    rows) and grouped_cumsum's offsets window (≤ n_ranges rows per
-    group by construction) are the two documented bare-group windows
-    and are exempt."""
+    """win_value_range_frame's windows must partition on the RANGE
+    BUCKET as well as event_type — a bare event_type window spec over
+    the data stream would re-introduce the type-cardinality
+    parallelism cap (round 7's halo `_vbkt` pin, re-targeted at round
+    14's cumulative decomposition: the carrier cumulants `_c`/`_s`/`_d`
+    must aggregate under a `__bkt`-partitioned window).  The NULL-peer
+    pass is a grouped aggregate, not a window.  grouped_cumsum's
+    offsets window (over the `__tot` totals, ≤ n_ranges rows per group
+    by construction) is the one documented bare-group window and is
+    exempt."""
+    import re
+
     opt = (
         REGISTRY["win_value_range_frame"]
         .spark(spark, sf_dir)
@@ -842,20 +844,20 @@ def test_value_range_frame_window_is_bucketed(spark, sf_dir):
         .optimizedPlan()
         .toString()
     )
-    specs = [
-        line for line in opt.splitlines() if "windowspecdefinition" in line
-    ]
+    # (window function, "partition and order exprs, ") per window spec
+    specs = re.findall(r"(\S+) windowspecdefinition\((.*?)specifiedwindowframe", opt)
     assert specs, "no window in plan"
-    carrier = [
-        line
-        for line in specs
-        if "_c#" in line or "_s#" in line or "_d#" in line
-    ]
+    assert any("__tot" in fn for fn, _ in specs), "no offsets window in plan"
+    carrier = [fn for fn, _ in specs if re.search(r"\(_[csd]#", fn)]
     assert carrier, "no cumulative carrier window in plan"
-    for line in carrier:
-        assert "__bkt" in line, (
-            f"carrier cumulant window not range-bucketed: "
-            f"{line.strip()[:140]}"
+    for fn, args in specs:
+        if "__tot" in fn:
+            continue
+        partition = [
+            a for a in args.split(", ") if a and " ASC " not in a and " DESC " not in a
+        ]
+        assert any(a.startswith("__bkt#") for a in partition), (
+            f"window not range-bucketed: {fn} over ({args.strip(', ')})"
         )
 
 

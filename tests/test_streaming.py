@@ -11,10 +11,8 @@ from pyspark.sql import functions as F
 
 from duckdb_hdfs_spark.streaming.pipelines import (
     dedup_stream,
-    read_document_stream,
+    drain,
     read_event_stream,
-    run_available_now_foreach_batch,
-    run_available_now_to_memory,
     running_user_totals,
     session_windows,
     windowed_counts,
@@ -61,12 +59,9 @@ def _batch_events(spark, event_files):
 def test_windowed_counts_matches_batch(spark, event_files):
     """Complete-mode streaming window agg == batch window agg."""
     stream = read_event_stream(spark, event_files, max_files_per_trigger=1)
-    run_available_now_to_memory(
-        windowed_counts(stream), "t_win_counts", output_mode="complete"
-    )
     got = {
         (r.win_start, r.event_type): (r.n_events, r.sum_value)
-        for r in spark.table("t_win_counts").collect()
+        for r in drain(windowed_counts(stream), "complete")[0].collect()
     }
     batch = (
         _batch_events(spark, event_files)
@@ -89,12 +84,9 @@ def test_windowed_append_emits_only_closed_windows(spark, event_files):
     """Append mode + watermark: only windows whose end <= final
     watermark (max ts - delay) are emitted."""
     stream = read_event_stream(spark, event_files, max_files_per_trigger=1)
-    run_available_now_to_memory(
-        windowed_counts(stream, window="1 day", watermark="1 day"),
-        "t_win_append",
-        output_mode="append",
-    )
-    emitted = spark.table("t_win_append")
+    emitted = drain(
+        windowed_counts(stream, window="1 day", watermark="1 day"), "append"
+    )[0]
     max_ts = _batch_events(spark, event_files).agg(F.max("ts")).first()[0]
     closed = emitted.filter(
         F.col("win_end") > F.lit(max_ts) - F.expr("INTERVAL 1 DAY")
@@ -106,12 +98,10 @@ def test_windowed_append_emits_only_closed_windows(spark, event_files):
 def test_session_windows_match_batch(spark, event_files):
     """Streaming session_window sessions == batch session_window."""
     stream = read_event_stream(spark, event_files, max_files_per_trigger=1)
-    run_available_now_to_memory(
-        session_windows(stream, gap="2 hours"), "t_sessions", output_mode="complete"
-    )
+    sessions = drain(session_windows(stream, gap="2 hours"), "complete")[0]
     got = {
         (r.user_id, r.session_start): (r.session_end, r.n_events, r.sum_value)
-        for r in spark.table("t_sessions").collect()
+        for r in sessions.collect()
     }
     batch = (
         _batch_events(spark, event_files)
@@ -130,6 +120,45 @@ def test_session_windows_match_batch(spark, event_files):
     assert got == want and len(got) > 0
 
 
+def test_drain_leaves_nothing_behind(spark, event_files):
+    """A memory-sink drain returns its rows and progress, and leaves no
+    temp view, no checkpoint under the scratch root and no
+    ``<tmp>/temporary-*`` checkpoint; a drained frame still collects
+    its own rows after the same query drained again."""
+    import glob as _glob
+    import os
+    import tempfile
+
+    from duckdb_hdfs_spark.sources.fs import _SCRATCH
+
+    def scratch_entries():
+        return set(os.listdir(_SCRATCH)) if os.path.isdir(_SCRATCH) else set()
+
+    def temp_checkpoints():
+        return set(_glob.glob(f"{tempfile.gettempdir()}/temporary-*"))
+
+    views = {t.name for t in spark.catalog.listTables()}
+    entries, temps = scratch_entries(), temp_checkpoints()
+
+    def run():
+        return drain(
+            windowed_counts(
+                read_event_stream(spark, event_files, max_files_per_trigger=1)
+            ),
+            "complete",
+        )
+
+    first, progress = run()
+    rows = sorted(first.collect())
+    assert rows and len(progress) >= 3
+    second, _ = run()
+    assert sorted(second.collect()) == rows
+    assert sorted(first.collect()) == rows
+    assert {t.name for t in spark.catalog.listTables()} == views
+    assert scratch_entries() == entries
+    assert temp_checkpoints() == temps
+
+
 def test_streaming_dedup_matches_batch(spark, sf_dir, tmp_path):
     """State-store dedup over a 2-chunk document stream == batch
     distinct over the same files (one survivor per content hash)."""
@@ -139,9 +168,12 @@ def test_streaming_dedup_matches_batch(spark, sf_dir, tmp_path):
     docs = load_table(spark, sf_dir, "documents")
     docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(f"{src}/a")
     docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.parquet(f"{src}/b")
-    stream = read_document_stream(spark, f"{src}/*", max_files_per_trigger=1)
-    run_available_now_to_memory(dedup_stream(stream), "t_dedup", "append")
-    got = spark.table("t_dedup")
+    stream = (
+        spark.readStream.schema(docs.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{src}/*")
+    )
+    got = drain(dedup_stream(stream), "append")[0]
     n_hashes = (
         docs.select(
             F.md5(
@@ -367,7 +399,11 @@ def test_stateful_running_totals(spark, event_files):
     batch groupBy sums, and totals only grow across micro-batches."""
     stream = read_event_stream(spark, event_files, max_files_per_trigger=1)
     batches: list = []
-    run_available_now_foreach_batch(running_user_totals(stream), batches)
+
+    def sink(batch_df, batch_id):
+        batches.append((batch_id, batch_df.collect()))
+
+    drain(running_user_totals(stream), "update", lambda w: w.foreachBatch(sink))
     assert len(batches) >= 3, f"expected >=3 micro-batches, got {len(batches)}"
     final: dict[int, tuple] = {}
     seen: dict[int, int] = {}
@@ -447,27 +483,25 @@ def test_clamp_event_time_defuses_watermark_poison(spark, tmp_path):
 
     src, max_real = _write_poisoned_stream(spark, str(tmp_path / "poisoned"))
 
-    def run(name: str, clamp: bool):
+    def run(clamp: bool):
         stream = read_event_stream(spark, src, max_files_per_trigger=1)
         if clamp:
             stream = clamp_event_time(
                 stream, slack="1 hour", now=max_real, flag_col="_clamped"
             ).drop("_clamped")
-        progress = run_available_now_to_memory(
+        return drain(
             session_windows(stream, gap="30 minutes", watermark="1 hour"),
-            name,
-            output_mode="complete",
+            "complete",
         )
-        return spark.table(name), progress
 
-    poisoned, prog_p = run("t_wm_poisoned", clamp=False)
+    poisoned, prog_p = run(clamp=False)
     n_poisoned = poisoned.count()
     assert dropped_by_watermark(prog_p) > 0, (
         "expected the 2262 event to poison the watermark and drop "
         "later batches' rows (the hazard this helper defends against)"
     )
 
-    clamped, prog_c = run("t_wm_clamped", clamp=True)
+    clamped, prog_c = run(clamp=True)
     assert dropped_by_watermark(prog_c) == 0
     assert clamped.count() > n_poisoned, (
         "clamped run should decide the sessions the poisoned run lost"
